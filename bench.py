@@ -118,10 +118,9 @@ def main() -> None:
     # The driver records only a 2000-char TAIL of stdout; with 100+
     # queries the full per-query map no longer fits (BENCH_r08.json
     # came back `parsed: null`).  So: the COMPLETE result goes to
-    # BENCH_FULL.json beside this script (PERF.md's source of truth),
-    # and the LAST stdout line is a compact headline — total, count,
-    # sf, plus the slowest queries, truncated to stay parseable inside
-    # the tail window.
+    # BENCH_FULL.json beside this script, and the LAST stdout line is a
+    # compact headline — total, count, sf, plus the slowest queries,
+    # truncated to stay parseable inside the tail window.
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     with open(full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)

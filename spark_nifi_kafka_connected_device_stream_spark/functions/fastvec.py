@@ -5,7 +5,7 @@ double folds (dot products, squared distances) per query.  The
 Catalyst higher-order functions (`aggregate(zip_with(...))`) that
 expressed them are CodegenFallback — every element is an interpreted
 lambda call — and profiling showed them dominating the whole family
-(PERF.md round-17 optimization notes; e.g. the 16-cell k-means build
+(OPTIMIZATION_r17.md; e.g. the 16-cell k-means build
 alone cost ~2.9 s/query at sf0.1).
 
 These kernels move the SAME arithmetic into numpy inside

@@ -870,23 +870,25 @@ def _funnel_oracle() -> str:
     from the same SQL fragments the individual oracles use (cluster CTEs
     from dedup_clusters, gates from text_quality_score /
     text_repetition_stats) so every stage stays in lockstep with its
-    standalone operator."""
+    standalone operator.  Its own CTEs are MATERIALIZED: DuckDB
+    otherwise inlines every reference, and `agg` alone is read five
+    times, so the whole chain ran once per reference."""
     from .dedup import _DUCK_SIGS, MAX_BUCKET_SIZE
 
     pct = lambda n: f"floor(CAST({n} AS DOUBLE) / n0 * 1000000.0 + 0.5) / 1000000.0"  # noqa: E731
     return f"""
     WITH RECURSIVE {_DUCK_SIGS},
-    bucket_sizes AS (
+    bucket_sizes AS MATERIALIZED (
       SELECT band_id, bucket, count(*) AS n FROM bands GROUP BY band_id, bucket
-    ), capped AS (
+    ), capped AS MATERIALIZED (
       SELECT b.doc_id, b.band_id, b.bucket
       FROM bands b JOIN bucket_sizes s USING (band_id, bucket)
       WHERE s.n <= {MAX_BUCKET_SIZE}
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM capped a JOIN capped b
         ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT doc_a, doc_b FROM pairs
       UNION ALL
       SELECT doc_b, doc_a FROM pairs
@@ -894,22 +896,22 @@ def _funnel_oracle() -> str:
       SELECT DISTINCT doc_a, doc_a FROM edges
       UNION
       SELECT r.src, e.doc_b FROM reach r JOIN edges e ON e.doc_a = r.dst
-    ), drops AS (
+    ), drops AS MATERIALIZED (
       SELECT src AS doc_id FROM reach GROUP BY src HAVING src <> min(dst)
-    ), fp AS (
+    ), fp AS MATERIALIZED (
       SELECT doc_id, md5(trim(regexp_replace(lower(text), ' +', ' ', 'g'))) AS fingerprint
       FROM documents
-    ), p1 AS (
+    ), p1 AS MATERIALIZED (
       SELECT doc_id, (doc_id = min(doc_id) OVER (PARTITION BY fingerprint)) AS pass1
       FROM fp
-    ), feat AS (
+    ), feat AS MATERIALIZED (
       SELECT doc_id, {_DUCK_TOKENS} AS toks FROM documents
-    ), g AS (
+    ), g AS MATERIALIZED (
       SELECT doc_id, toks,
              list_transform(generate_series(1, greatest(len(toks) - 2, 0)),
                             i -> array_to_string(toks[i:i+2], ' ')) AS g3
       FROM feat
-    ), gates AS (
+    ), gates AS MATERIALIZED (
       SELECT doc_id,
              (len(toks) >= 20
               AND CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) >= 0.2) AS pass3,
@@ -921,13 +923,13 @@ def _funnel_oracle() -> str:
                         ELSE floor((CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE)
                              / len(g3)) * 10000.0 + 0.5) / 10000.0 END) <= 0.18) AS pass4
       FROM g
-    ), flags AS (
+    ), flags AS MATERIALIZED (
       SELECT d.doc_id, p1.pass1, (dr.doc_id IS NULL) AS pass2, ga.pass3, ga.pass4
       FROM documents d
       JOIN p1 ON p1.doc_id = d.doc_id
       LEFT JOIN drops dr ON dr.doc_id = d.doc_id
       JOIN gates ga ON ga.doc_id = d.doc_id
-    ), agg AS (
+    ), agg AS MATERIALIZED (
       SELECT CAST(count(*) AS BIGINT) AS n0,
              CAST(count(*) FILTER (WHERE pass1) AS BIGINT) AS n1,
              CAST(count(*) FILTER (WHERE pass1 AND pass2) AS BIGINT) AS n2,

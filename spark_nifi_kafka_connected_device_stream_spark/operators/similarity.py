@@ -1092,26 +1092,28 @@ _KCENTER_K = 8
 
 
 def _kcenter_oracle(k: int) -> str:
+    # every CTE is MATERIALIZED: each link of the chain reads the one
+    # before it twice, so DuckDB's inlining re-evaluated it 2^k times
     cos = _DUCK_COS
     ctes = [
-        "s0 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 1)",
-        "p0 AS (SELECT vec_id FROM s0)",
-        f"cov1 AS (SELECT q.vec_id, q.embedding, ({cos}) AS cov "
+        "s0 AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 1)",
+        "p0 AS MATERIALIZED (SELECT vec_id FROM s0)",
+        f"cov1 AS MATERIALIZED (SELECT q.vec_id, q.embedding, ({cos}) AS cov "
         f"FROM embeddings q CROSS JOIN s0 c)",
     ]
     for i in range(1, k):
         ctes.append(
-            f"s{i} AS (SELECT vec_id, embedding, cov FROM cov{i} "
+            f"s{i} AS MATERIALIZED (SELECT vec_id, embedding, cov FROM cov{i} "
             f"WHERE vec_id NOT IN (SELECT vec_id FROM p{i - 1}) "
             f"ORDER BY cov ASC, vec_id ASC LIMIT 1)"
         )
         if i < k - 1:
             ctes.append(
-                f"p{i} AS (SELECT vec_id FROM p{i - 1} "
+                f"p{i} AS MATERIALIZED (SELECT vec_id FROM p{i - 1} "
                 f"UNION SELECT vec_id FROM s{i})"
             )
             ctes.append(
-                f"cov{i + 1} AS (SELECT q.vec_id, q.embedding, "
+                f"cov{i + 1} AS MATERIALIZED (SELECT q.vec_id, q.embedding, "
                 f"greatest(q.cov, ({cos})) AS cov "
                 f"FROM cov{i} q CROSS JOIN s{i} c)"
             )

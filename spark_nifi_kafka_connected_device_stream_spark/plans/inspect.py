@@ -58,3 +58,12 @@ def shuffle_count(df: DataFrame) -> int:
     # shuffle exchanges print as "Exchange hashpartitioning(...)" etc.;
     # "BroadcastExchange" is a distinct token and never matches \bExchange\b
     return len(re.findall(r"\bExchange\b", text))
+
+
+def audit_counts(df: DataFrame) -> dict[str, int]:
+    """One query's plan-audit record, as kept in plans/golden.json."""
+    return {
+        "shuffles": shuffle_count(df),
+        "broadcast_joins": broadcast_join_count(df),
+        "pushed_filters": len(pushed_filters(df)),
+    }

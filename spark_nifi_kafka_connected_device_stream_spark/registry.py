@@ -24,28 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# operator modules that self-register on import.
-#
-# ORDER MATTERS: the driver's per-round correctness gate checks only the
-# FIRST 50 registry entries.  Since round 3 the fine-grained _PROMOTE
-# list below (not module order) decides which 50 land in the window —
-# each round's rotation is pinned by the previous round's verdict so
-# every query's driver stamp stays fresh and the never-driver-checked
-# backlog stays zero.  Module order still fixes the BASE ordering that
-# everything not promoted/demoted keeps.
+# operator modules that self-register on import; their order is the
+# registry order.
 _OPERATOR_MODULES = (
     "spark_nifi_kafka_connected_device_stream_spark.operators.windows",
     "spark_nifi_kafka_connected_device_stream_spark.operators.text",
     "spark_nifi_kafka_connected_device_stream_spark.operators.similarity",
-    # the r17 split of the 2.6k-LoC similarity module (VERDICT r16 item
-    # 4): the ANN serving tier (IVF/PQ/IVFADC + the nprobe sweep) moved
-    # into its own file, same treatment as the r14/r15 splits
     "spark_nifi_kafka_connected_device_stream_spark.operators.similarity_ann",
     "spark_nifi_kafka_connected_device_stream_spark.operators.pipeline_ops",
     "spark_nifi_kafka_connected_device_stream_spark.operators.dedup",
     "spark_nifi_kafka_connected_device_stream_spark.operators.events",
-    # the r14 split of the 4.2k-LoC events module (VERDICT r13 item 5):
-    # pure move into the tier files its registry tags already implied
     "spark_nifi_kafka_connected_device_stream_spark.operators.events_sessions",
     "spark_nifi_kafka_connected_device_stream_spark.operators.events_timeseries",
     "spark_nifi_kafka_connected_device_stream_spark.operators.events_engagement",
@@ -53,19 +41,10 @@ _OPERATOR_MODULES = (
     "spark_nifi_kafka_connected_device_stream_spark.operators.multimodal",
     "spark_nifi_kafka_connected_device_stream_spark.operators.privacy",
     "spark_nifi_kafka_connected_device_stream_spark.operators.curation",
-    # the r15 split of the 2.4k-LoC curation module (VERDICT r14 item
-    # 6): pure move of the LM/perplexity tier into its own file
     "spark_nifi_kafka_connected_device_stream_spark.operators.curation_lm",
-    # udf_ops after curation: both its queries have green r2 driver rows,
-    # while curation is all round-3 additions that need first rows — this
-    # ordering puts the full curation tier inside the 50-entry window
-    # (pandas_udf_charge still lands at 49 for a re-check).
     "spark_nifi_kafka_connected_device_stream_spark.operators.udf_ops",
     "spark_nifi_kafka_connected_device_stream_spark.operators.cohorts",
     "spark_nifi_kafka_connected_device_stream_spark.operators.analytics",
-    # the r14 split of the 3.9k-LoC analytics module (same treatment as
-    # events — VERDICT r13 item 5's no-file->2.5k-LoC criterion):
-    # pure move into the tier files its registry tags already implied
     "spark_nifi_kafka_connected_device_stream_spark.operators.analytics_stats",
     "spark_nifi_kafka_connected_device_stream_spark.operators.analytics_abtest",
     "spark_nifi_kafka_connected_device_stream_spark.operators.analytics_orders",
@@ -103,111 +82,6 @@ def register(
     return deco
 
 
-# Fine-grained window control on top of module order: names in _PROMOTE
-# are moved to the FRONT of the registry (in this order), names in
-# _DEMOTE to the BACK — everything else keeps registration order.  This
-# lets a round put specific never-driver-checked queries inside the
-# driver's 50-entry correctness window without reshuffling whole
-# modules.  Round 17 executes the rotation pinned at end of round 16
-# (VERDICT r16 item 1), fully determined with zero slack: the first 3
-# slots are ALL of round 16's DEFERRED queue (never-driver-checked
-# backlog → ZERO), the next 29 are the ENTIRE residual of the cohort
-# whose freshest green row is round 10 (after this round no stamp is
-# older than round 11), and the remaining 18 are the
-# alphabetically-first 18 of the 50-query r11 cohort (computed fresh
-# from CORRECTNESS_r01..r16).
-_PROMOTE: tuple[str, ...] = (
-    # ex-DEFERRED: round-16 additions never driver-checked (3)
-    "similarity_topk_ivfpq",
-    "text_bpe_train_merges",
-    "text_bpe_segment_apply",
-    # stale re-checks: the residual 29 of the r10 cohort (retires r10)
-    "events_mann_whitney_value",
-    "events_peak_concurrency",
-    "events_session_trigrams",
-    "events_spearman_hour_value",
-    "events_theil_sen_trend",
-    "events_user_gini",
-    "events_value_log2_histogram",
-    "events_value_winsorized_stats",
-    "events_weekly_growth_accounting",
-    "lineitem_discount_elasticity",
-    "lineitem_returns_pchart",
-    "nation_revenue_share_of_region",
-    "orders_bloom_prefilter_bound",
-    "orders_cohort_ltv_curve",
-    "orders_column_profile",
-    "orders_interpurchase_intervals",
-    "orders_monthly_seasonality",
-    "orders_ship_latency_percentiles",
-    "part_fuzzy_linkage_blocked",
-    "part_skyline_price_size",
-    "privacy_l_diversity_report",
-    "privacy_pii_gate_batch",
-    "similarity_recall_report",
-    "source_crossentropy_matrix",
-    "split_leakage_report",
-    "text_bm25_search",
-    "text_collocation_lift",
-    "text_zipf_fit",
-    "window_percent_rank_cume_dist",
-    # stale re-checks: alphabetically-first 18 of the r11 cohort
-    "dedup_threshold_sensitivity",
-    "documents_holdout_perplexity",
-    "documents_length_tukey_pairs",
-    "documents_source_simpson_diversity",
-    "embedding_effective_dims",
-    "embedding_near_dup_pairs",
-    "embedding_norm_stats",
-    "embedding_random_projection_distortion",
-    "embedding_scalar_quantize",
-    "embedding_silhouette_by_label",
-    "events_ab_srm_check",
-    "events_audience_overlap",
-    "events_bootstrap_mean_ci",
-    "events_bounce_rate_daily",
-    "events_fano_dispersion",
-    "events_gapfill_hourly",
-    "events_hill_tail_index",
-    # ROTATION DEVIATION (documented): the 18th r11 slot goes to
-    # similarity_topk_ivf_quantized instead of events_hourly_stats —
-    # round 17 changed its SEMANTICS (label-as-cell -> k-means coarse
-    # quantizer, VERDICT r16 item 2), which invalidates its old stamp;
-    # a changed query needs a fresh driver row more than an 18th stale
-    # re-check does.  events_hourly_stats moves to the r18 residual.
-    "similarity_topk_ivf_quantized",
-)
-_DEMOTE: tuple[str, ...] = ()
-
-# Queries registered AFTER this round's 50-entry driver window filled.
-# Round 17's window is FULLY consumed by the pinned rotation (3
-# ex-DEFERRED + 29 r10-residual + 18 r11-stale re-checks — VERDICT r16
-# item 1), so this queue restarts empty and collects ONLY round-17
-# additions — capped at 12 so round 18's window keeps 38 slots for
-# stale re-checks.  Every name here must be oracle-parity-green
-# locally on every pytest run; tests/test_oracle_parity.py asserts
-# that any never-driver-checked query is either inside the window or
-# on this explicit queue — a silent backlog stays impossible.
-# Round-18 rotation, pre-computed (same construction): _PROMOTE =
-# this DEFERRED queue + the residual 33 of the r11 cohort
-# (events_hourly_stats + events_id_integrity_audit ..
-# text_token_fertility_by_lang, alphabetical) +
-# enough of the alphabetically-first r12 cohort to fill 50 (compute
-# fresh from CORRECTNESS_r01..r17).
-DEFERRED: tuple[str, ...] = (
-    # round-17 additions (coarse-quantizer diagnostics, VERDICT r16
-    # item 2's composition made observable)
-    "similarity_cell_balance_report",
-    "similarity_kmeans_nprobe_sweep",
-    # round-17 additions, second wave (tokenizer QA + PQ utilization)
-    "text_bpe_compression_ratio",
-    "similarity_pq_code_histogram",
-    # third wave: the IVFADC recall number as a driver-verified row
-    "similarity_ivfpq_recall_report",
-    "similarity_ivfpq_nprobe_sweep",
-)
-
-
 def _load() -> None:
     global _LOADED
     if not _LOADED:
@@ -218,17 +92,7 @@ def _load() -> None:
 
 def all_specs() -> dict[str, QuerySpec]:
     _load()
-    ordered: dict[str, QuerySpec] = {}
-    for name in _PROMOTE:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    for name, spec in _REGISTRY.items():
-        if name not in ordered and name not in _DEMOTE:
-            ordered[name] = spec
-    for name in _DEMOTE:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    return ordered
+    return dict(_REGISTRY)
 
 
 def _worker_safe(fn: QueryFn) -> QueryFn:

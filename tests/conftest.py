@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -31,3 +32,23 @@ def duck():
         )
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def rocksdb_state_store(spark):
+    """Run the body with the RocksDB state store provider, then restore
+    the session's previous provider (or unset it)."""
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.stateful import (
+        _ROCKSDB_PROVIDER,
+    )
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, _ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -151,39 +151,6 @@ def test_registry_counts_match_readme():
         f"README says {m.group(1)}/{m.group(2)}, registry has {n_total}/{n_oracle}"
     )
 
-    # PERF.md drifted twice (rounds 4-5 README, round 7 its own table):
-    # assert its counts AND that the plan-audit table covers the registry
-    perf = open(
-        os.path.join(os.path.dirname(__file__), "..", "PERF.md")
-    ).read()
-    m = re.search(r"(\d+) registered queries, (\d+) oracle-backed", perf)
-    assert m, "PERF.md registry-count sentence missing"
-    assert (int(m.group(1)), int(m.group(2))) == (n_total, n_oracle), (
-        f"PERF.md says {m.group(1)}/{m.group(2)}, registry has {n_total}/{n_oracle}"
-    )
-    audit = perf.split("## Plan audit")[1]
-    audit_rows = set(re.findall(r"^\| ([a-z0-9_]+) \|", audit, flags=re.M)) - {"query"}
-    missing = set(specs) - audit_rows
-    stale = audit_rows - set(specs)
-    assert not missing and not stale, (
-        f"PERF.md plan-audit table drift: missing={sorted(missing)} stale={sorted(stale)}"
-    )
-    # every audit row must be "| name | int | int | int |", and every
-    # headline row "| name | float |" — the r7 corruption was plan
-    # cells pasted into the seconds column
-    for line in audit.splitlines():
-        m = re.match(r"^\| [a-z0-9_]+ \|(.*)\|$", line)
-        if m and "query" not in line:
-            cells = [c.strip() for c in m.group(1).split("|")]
-            assert len(cells) == 3 and all(c.isdigit() for c in cells), line
-    headline = perf.split("## Headline benchmark")[1].split("##")[0]
-    for line in headline.splitlines():
-        m = re.match(r"^\| ([a-z0-9_]+) \|(.*)\|$", line)
-        if m and m.group(1) != "query":
-            assert m.group(1) in specs, line
-            cells = [c.strip() for c in m.group(2).split("|")]
-            assert len(cells) == 1 and float(cells[0]) >= 0, line
-
 
 def test_driver_contract_survives_foreign_cwd():
     """The correctness harness imports __spark_entry__ by absolute path

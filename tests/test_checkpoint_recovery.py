@@ -20,6 +20,7 @@ from spark_nifi_kafka_connected_device_stream_spark.streaming.pipeline import (
 )
 from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import parquet_sink
 
+from .conftest import rocksdb_state_store
 from .test_streaming import _mk_events, _write_file
 
 
@@ -87,12 +88,7 @@ def test_rocksdb_state_survives_checkpoint_restart(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     chk_dir = str(tmp_path / "chk")
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         # run 1: finalize 10:00 and 10:05; leave 10:10 OPEN with 10
         # rows per source in RocksDB state (watermark = 11 - 5m = 10:06)
         _write_file(in_dir, "b1.json", [e[2] for e in _mk_events(0, 90)])
@@ -114,11 +110,6 @@ def test_rocksdb_state_survives_checkpoint_restart(spark, tmp_path):
             q2.processAllAvailable()
         finally:
             q2.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     rows = spark.read.parquet(out_dir).collect()
     keyed = Counter((r["start"].strftime("%H:%M"), r["source"]) for r in rows)

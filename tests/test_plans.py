@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from spark_nifi_kafka_connected_device_stream_spark.plans import (
+    audit_counts,
     broadcast_join_count,
     explain_str,
     pushed_filters,
@@ -465,43 +466,43 @@ def test_round11_plan_shapes(spark):
 
 
 def test_plan_audit_golden_no_drift(spark):
-    """Round-14 stretch (VERDICT r13 item 7): PERF.md's plan-audit
-    table is the GOLDEN plan-shape record — regenerated by
-    tools/regen_plan_audit.py, committed, and asserted here against
-    the LIVE plans so a silent plan regression (a query's shuffle
-    count doubling, a broadcast join degrading to shuffle, a filter
-    no longer reaching the scan) fails CI before the bench ever sees
-    it.  Tolerance is DIRECTIONAL: improvements (fewer shuffles, more
+    """plans/golden.json is the GOLDEN plan-shape record, regenerated
+    by tools/regen_plan_audit.py and asserted here against the LIVE
+    plans, so a silent plan regression (a query's shuffle count
+    doubling, a broadcast join degrading to shuffle, a filter no longer
+    reaching the scan) fails CI before the bench ever sees it.
+    Tolerance is DIRECTIONAL: improvements (fewer shuffles, more
     broadcasts, more pushdown) pass — rerun the regen tool to ratchet
-    the golden — while regressions fail.  Plan shape is SF-independent
-    (the golden is generated at sf0.001, the same SF used here)."""
+    the golden — while regressions fail.  A row the golden accepted in
+    the worsening direction is listed in its `exceptions` with the
+    reason.  Plan shape is SF-independent (the golden is generated at
+    sf0.001, the same SF used here)."""
+    import json
     import os
-    import re
 
-    from spark_nifi_kafka_connected_device_stream_spark.plans import inspect as I
+    with open(os.path.join(os.path.dirname(__file__), "..", "plans", "golden.json")) as fh:
+        golden = json.load(fh)
+    queries = golden["queries"]
+    assert set(queries) == set(SPECS), (
+        f"golden drift: missing={sorted(set(SPECS) - set(queries))} "
+        f"stale={sorted(set(queries) - set(SPECS))}"
+    )
+    for exc in golden["exceptions"]:
+        assert exc["query"] in SPECS, exc
+        assert exc["metric"] in ("shuffles", "broadcast_joins", "pushed_filters"), exc
+        assert exc["justification"].strip(), exc
 
-    perf = open(
-        os.path.join(os.path.dirname(__file__), "..", "PERF.md")
-    ).read()
-    audit = perf.split("## Plan audit", 1)[1]
-    golden = {
-        m.group(1): (int(m.group(2)), int(m.group(3)), int(m.group(4)))
-        for m in re.finditer(
-            r"^\| ([a-z0-9_]+) \| (\d+) \| (\d+) \| (\d+) \|$", audit, flags=re.M
-        )
-    }
     regressions = []
     for name, spec in SPECS.items():
-        want = golden.get(name)
-        if want is None:
-            # coverage parity golden-vs-registry is pinned separately in
-            # test_catalog_cache.py::test_registry_counts_match_readme
-            continue
-        df = spec.fn(spark, SF_SMALL)
-        got = (I.shuffle_count(df), I.broadcast_join_count(df), len(I.pushed_filters(df)))
-        if got[0] > want[0] or got[1] < want[1] or got[2] < want[2]:
+        want = queries[name]
+        got = audit_counts(spec.fn(spark, SF_SMALL))
+        if (
+            got["shuffles"] > want["shuffles"]
+            or got["broadcast_joins"] < want["broadcast_joins"]
+            or got["pushed_filters"] < want["pushed_filters"]
+        ):
             regressions.append((name, {"golden": want, "live": got}))
     assert not regressions, (
-        "plan drift vs PERF.md golden (shuffles up / broadcasts down / "
+        "plan drift vs plans/golden.json (shuffles up / broadcasts down / "
         f"pushdown down): {regressions}"
     )

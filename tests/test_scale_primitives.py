@@ -17,7 +17,7 @@ from spark_nifi_kafka_connected_device_stream_spark.functions.scale import (
 from spark_nifi_kafka_connected_device_stream_spark.plans import explain_str, shuffle_count
 from spark_nifi_kafka_connected_device_stream_spark.sources.catalog import load_table
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, rocksdb_state_store
 
 
 def test_salted_agg_equivalence(spark):
@@ -122,12 +122,7 @@ def test_rocksdb_state_store_runs(spark, tmp_path):
 
     from .test_streaming import _mk_events, _write_file
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         d = str(tmp_path / "in")
         _write_file(d, "b1.json", [e[2] for e in _mk_events(0, 60)])
         agg = windowed_source_counts(parse_product_views(json_file_stream(spark, d)))
@@ -142,11 +137,6 @@ def test_rocksdb_state_store_runs(spark, tmp_path):
             q.stop()
         rows = spark.sql("SELECT * FROM rocks_pv").collect()
         assert sum(r["source_number"] for r in rows) == 60
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_skew_pair_identical_results(spark):

@@ -25,6 +25,7 @@ from spark_nifi_kafka_connected_device_stream_spark.streaming.stateful import (
     stream_stream_interval_join,
 )
 
+from .conftest import rocksdb_state_store
 from .test_streaming import _event, _mk_events, _write_file
 
 
@@ -339,7 +340,6 @@ def test_running_totals_tws_gated_or_equivalent(spark, tmp_path):
     import pytest
 
     from spark_nifi_kafka_connected_device_stream_spark.streaming.stateful import (
-        _ROCKSDB_PROVIDER,
         running_totals_tws,
         tws_available,
     )
@@ -353,8 +353,6 @@ def test_running_totals_tws_gated_or_equivalent(spark, tmp_path):
         with pytest.raises(NotImplementedError, match="google.protobuf"):
             running_totals_tws(stream, key_col="source", value_col="value")
         return
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER)
     epochs = []
 
     def collect(df, _epoch):
@@ -362,21 +360,18 @@ def test_running_totals_tws_gated_or_equivalent(spark, tmp_path):
         if rows:
             epochs.append({r["key"]: (r["total_events"], r["total_value"]) for r in rows})
 
-    totals = running_totals_tws(stream, key_col="source", value_col="value")
-    q = (
-        totals.writeStream.foreachBatch(collect)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    with rocksdb_state_store(spark):
+        totals = running_totals_tws(stream, key_col="source", value_col="value")
+        q = (
+            totals.writeStream.foreachBatch(collect)
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "chk"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     assert epochs and epochs[0]["desktop"] == (10, 25.0)
 
 
@@ -689,12 +684,7 @@ def test_streaming_heavy_hitters_bounded_under_rocksdb(spark, tmp_path):
         streaming_heavy_hitters,
     )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         d = str(tmp_path / "in")
         needle = [
             _event(f"2021-03-06 10:00:{s:02d}.000", 0, "desktop") for s in range(20)
@@ -718,11 +708,6 @@ def test_streaming_heavy_hitters_bounded_under_rocksdb(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     rows = spark.sql("SELECT * FROM hh_rocks").collect()
     per_emission = collections.Counter()
@@ -1383,12 +1368,7 @@ def test_status_streaks_equivalence_under_rocksdb(spark, tmp_path):
         status_streak_islands,
     )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         d = str(tmp_path / "in")
         # key A: AA|AB|BC + close -> runs A3, B2, C1; key B: XX|XY + close
         seqs = {"a": "AAABBC", "b": "XXXY"}
@@ -1418,11 +1398,6 @@ def test_status_streaks_equivalence_under_rocksdb(spark, tmp_path):
                 q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     got = Counter(
         (r["key"], r["status"], r["streak_len"])
@@ -1727,12 +1702,7 @@ def test_streaming_asof_under_rocksdb(spark, tmp_path):
         streaming_asof_device_state,
     )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         d = str(tmp_path / "in")
         b0 = [
             {"user_id": 1, "ts_us": 100, "event_id": 10, "event_type": "signup", "value": 2.0},
@@ -1771,11 +1741,6 @@ def test_streaming_asof_under_rocksdb(spark, tmp_path):
                 q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     got = {
         (r["user_id"], r["event_id"]): (

@@ -3,7 +3,7 @@
 Pins the rule the round-12 judge applied by hand (VERDICT r12 item 6)
 so every future round's adjudication is ONE command:
 
-    python tools/bench_diff.py r11 r12 [--threshold 1.25] [--update-perf]
+    python tools/bench_diff.py r11 r12 [--threshold 1.25]
 
 Inputs: `BENCH_r{A}.json` / `BENCH_r{B}.json` (the driver's per-round
 records; `parsed.queries` holds per-query min-of-N seconds, truncated
@@ -22,10 +22,6 @@ The rule, per query present in both rounds:
   audit — a genuine speedup needs no .explain() pass)
 - moved, no median available for the query         -> UNADJUDICATED
   (re-run bench.py with SPARK_GRAFT_BENCH_RUNS >= 2)
-
-`--update-perf` rewrites the generated section in PERF.md between the
-BENCH_DIFF markers (appending it if absent) so the prose file is
-produced by the tool, not by hand.
 """
 
 from __future__ import annotations
@@ -36,8 +32,6 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MARK_BEGIN = "<!-- BENCH_DIFF:BEGIN (generated by tools/bench_diff.py) -->"
-MARK_END = "<!-- BENCH_DIFF:END -->"
 
 
 def _load_round(tag: str) -> dict[str, float]:
@@ -110,7 +104,6 @@ def render(rows: list[dict], a: str, b: str, threshold: float, runs: int) -> str
     for r in rows:
         counts[r["verdict"]] = counts.get(r["verdict"], 0) + 1
     lines = [
-        MARK_BEGIN,
         f"## Bench adjudication {a} -> {b} (generated: `python tools/bench_diff.py {a} {b}`)",
         "",
         f"Rule: |movement| <= {threshold}x is STABLE; above it, a query is "
@@ -138,21 +131,7 @@ def render(rows: list[dict], a: str, b: str, threshold: float, runs: int) -> str
         )
     if all(r["verdict"] == "stable" for r in rows):
         lines.append("| _none — every shared query is stable_ | | | | | | |")
-    lines += ["", MARK_END]
     return "\n".join(lines)
-
-
-def update_perf(section: str) -> None:
-    path = os.path.join(REPO, "PERF.md")
-    text = open(path).read() if os.path.exists(path) else ""
-    if MARK_BEGIN in text and MARK_END in text:
-        pre = text.split(MARK_BEGIN)[0]
-        post = text.split(MARK_END, 1)[1]
-        text = pre + section + post
-    else:
-        text = text.rstrip() + "\n\n" + section + "\n"
-    with open(path, "w") as fh:
-        fh.write(text)
 
 
 def main() -> int:
@@ -160,18 +139,13 @@ def main() -> int:
     ap.add_argument("old", help="round tag, e.g. r11")
     ap.add_argument("new", help="round tag, e.g. r12")
     ap.add_argument("--threshold", type=float, default=1.25)
-    ap.add_argument("--update-perf", action="store_true")
     args = ap.parse_args()
 
     old, new = _load_round(args.old), _load_round(args.new)
     _, medians, runs = _load_full()
     rows = adjudicate(old, new, medians, args.threshold)
-    section = render(rows, args.old, args.new, args.threshold, runs)
-    print(section)
+    print(render(rows, args.old, args.new, args.threshold, runs))
     drift = [r for r in rows if r["verdict"] == "drift-slower"]
-    if args.update_perf:
-        update_perf(section)
-        print(f"\n[PERF.md updated; drift count = {len(drift)}]", file=sys.stderr)
     # DRIFT-SLOWER is the bucket the doctrine says owes a plan audit —
     # exit nonzero so CI / the driver loop can gate on it (r13 ADVICE:
     # an unconditional 0 made the one actionable verdict ungateable).

@@ -1,7 +1,6 @@
 """Same-day confirmatory remeasure for bench-drift adjudication.
 
-The pinned doctrine (PERF.md "Drift-slower follow-up"): when
-`tools/bench_diff.py` flags DRIFT-SLOWER rows, the confirmatory step
+When `tools/bench_diff.py` flags DRIFT-SLOWER rows, the confirmatory step
 is a SAME-DAY two-commit rerun — time the flagged queries on the old
 round-end commit AND on current code, on the same box state, min-of-N.
 If the two commits are time-indistinguishable, the cross-round
