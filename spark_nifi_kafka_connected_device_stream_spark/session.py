@@ -13,6 +13,35 @@ width, warehouse dir + Hive support) with a scale-aware posture:
   host-local time; SURVEY.md §4.1 flags this as a crutch to drop).
 - Arrow enabled for the Python boundary (Pandas UDFs in the extension
   operators are Arrow-batched, never row-at-a-time).
+- Streaming checkpoints written through `FileSystem` create + rename
+  (`FileSystemBasedCheckpointFileManager`), not Spark's default
+  `FileContext` manager.  Without the native Hadoop library, the local
+  FS's `FileContext.rename` resolves links on source and destination
+  by starting a `readlink` process each time; offset, commit, source
+  and sink logs and every state-store delta file paid several of those
+  per trigger.  Measured on 4 cores, one `perfbench` stream run
+  (backlog drains plus a two-query trickle of `run_product_view_job`)
+  started 5,501 `readlink` processes, each forked from the driver
+  JVM, and 5 with this manager, none on checkpoint paths; summed
+  state-store commit fell from ~370 to ~70 ms per trickle trigger
+  (PERF.md, "Per-trigger file-system overhead").  Spark's checkpoint
+  checksums still wrap the manager, and on `file:` the FileContext
+  no-overwrite rename is itself stat-then-rename, so the guarantee is
+  unchanged.
+- File-source listing jobs sized to the cores
+  (`parallelPartitionDiscovery.parallelism` = cpus, like the shuffle
+  width).  A read of more than 32 paths lists them in a Spark job, one
+  task per path by default: the stream's 200-file backfill triggers
+  re-resolved their files in 200-task jobs, and `getBatch` averaged
+  0.6-0.7 s a backfill trigger against 0.11-0.13 s with 4 tasks.
+  Reads of 32 paths or fewer list on the driver and are unaffected.
+- Python data source filter pushdown on
+  (`spark.sql.python.filterPushdown.enabled`, off by default in Spark
+  4.1) for every session, so query functions never set it.
+
+Every default here is a plain builder conf; `extra_conf` overrides any
+of them, e.g. the FileContext checkpoint manager on HDFS or object
+stores.
 """
 
 from __future__ import annotations
@@ -42,6 +71,8 @@ def get_session(
     verbatim (v1:10).  `hive=True` + `warehouse_dir` reproduce the v2
     warehouse session (v2:22-24: spark.sql.warehouse.dir +
     enableHiveSupport) for persistent `saveAsTable`/DDL.
+    `extra_conf` is applied last, so it overrides every default set
+    here (see the module docstring for why each is set).
     """
     cpus = default_parallelism()
     # Driver-side Python runner processes (Python data source planning /
@@ -60,6 +91,13 @@ def get_session(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

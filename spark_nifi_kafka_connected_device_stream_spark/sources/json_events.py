@@ -61,7 +61,15 @@ def json_file_stream(
     NiFi's Keep Source File=false; cleanSource='archive' (NiFi's move-
     to-archive) REQUIRES `source_archive_dir` — Spark's file source
     rejects archive mode without it, so this function does too, at
-    call time instead of query start."""
+    call time instead of query start.
+
+    Per trigger, the source lists `directory` for new files and then
+    re-resolves the files the batch takes.  A batch of more than 32
+    files (`spark.sql.sources.parallelPartitionDiscovery.threshold`)
+    is resolved in a Spark listing job with one task per file unless
+    the parallelism is capped; `session.get_session` caps it at the
+    core count.  `max_files_per_trigger` bounds both the batch and its
+    listing."""
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -277,20 +277,33 @@ class DeviceEventsDataSource(DataSource):
         return _EventsStreamReader(self.options)
 
 
+_REGISTERED_SESSIONS: set[str] = set()
+
+
 def register_python_sources(spark) -> None:
-    """Idempotent registration of all three formats on a session
-    (batch reader, stream reader, and — once defined below — the
-    audit writer)."""
+    """Register all three formats on a session once (batch reader,
+    stream reader, and — once defined below — the audit writer).
+
+    Registrations live in the session's own data source registry and
+    `newSession()` starts an empty one, so the key is the JVM session's
+    UUID, not the application id.  Later calls on a registered session
+    do nothing: no re-registration (3 WARN lines each) and no conf
+    write — the pushFilters gate is a `session.get_session` default.
+    Spark 4.1 checks a new name against the thread's ACTIVE session, so
+    registering on a `newSession()` that is not active fails with
+    DATA_SOURCE_ALREADY_EXISTS while the active session has the source."""
     # Python data sources are pickled by reference: the planner worker
     # re-imports this module, so the package must be shipped for any
     # driver whose cwd isn't the repo root (same failure class the
     # registry wrapper closes for pandas UDFs).
     ensure_workers_importable(spark)
-    # gate for the pushFilters API (off by default in Spark 4.1)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    key = spark._jsparkSession.sessionUUID()
+    if key in _REGISTERED_SESSIONS:
+        return
     spark.dataSource.register(DeviceRegistryDataSource)
     spark.dataSource.register(DeviceEventsDataSource)
     spark.dataSource.register(DeviceAuditDataSource)
+    _REGISTERED_SESSIONS.add(key)
 
 
 # ---------------------------------------------------------------------------

@@ -408,3 +408,29 @@ def test_audit_overwrite_commit_is_manifest_first(tmp_path, monkeypatch):
     assert man == [{"file": new_file, "n_rows": 1}]
     assert not os.path.exists(os.path.join(d, old_file))  # stale gen removed
     assert not os.path.exists(os.path.join(d, "_manifest.json.tmp"))
+
+
+def test_registered_query_leaves_session_conf_unchanged(spark, monkeypatch):
+    """Query functions have no side effects on the session: the
+    registered pushdown queries register their sources once per
+    session (no re-registration, no WARN lines) and write no conf."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from spark_nifi_kafka_connected_device_stream_spark.registry import queries
+
+    query = queries()["device_registry_models"]
+    register_python_sources(spark)
+    registered = []
+    real_register = DataSourceRegistration.register
+
+    def counting_register(self, source):
+        registered.append(source.name())
+        return real_register(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting_register)
+    before = spark.conf.getAll
+    first = sorted(tuple(r) for r in query(spark, "").collect())
+    second = sorted(tuple(r) for r in query(spark, "").collect())
+    assert first == second and first
+    assert spark.conf.getAll == before
+    assert registered == []

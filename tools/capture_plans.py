@@ -20,18 +20,11 @@ def main() -> int:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
-
     from spark_nifi_kafka_connected_device_stream_spark.plans.inspect import explain_str
     from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
+    from spark_nifi_kafka_connected_device_stream_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="capture_plans", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     outdir = os.path.join(REPO, "plans", "r18")
     os.makedirs(outdir, exist_ok=True)

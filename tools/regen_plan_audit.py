@@ -39,17 +39,11 @@ def dump_golden(queries: dict[str, dict[str, int]], exceptions: list[dict[str, s
 
 def main() -> int:
     sys.path.insert(0, REPO)
-    from pyspark.sql import SparkSession
-
     from spark_nifi_kafka_connected_device_stream_spark.plans import audit_counts
     from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
+    from spark_nifi_kafka_connected_device_stream_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="regen_plan_audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = all_specs()
