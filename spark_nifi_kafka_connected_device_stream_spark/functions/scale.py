@@ -86,8 +86,10 @@ def _ranged_with_offsets(
       both branches for correctness, not just cost — without the
       checkpoint that guarantee rests on physical exchange reuse,
       which silently degrades if spark.sql.exchange.reuse is off or
-      AQE reshapes one branch.  Lazy (eager=False): the offsets job
-      materializes it, no dedicated barrier job.
+      AQE reshapes one branch.  Lazy (eager=False) defers the final
+      stage to the offsets job, but it is not job-free: with AQE on
+      (the engine default) the call itself runs the plan's shuffle
+      map stages as a job (1 job for a groupBy input; 0 with AQE off).
 
     Callers must pass a total order in `order_cols` when row-level
     results depend on rank uniqueness (see each primitive's contract).

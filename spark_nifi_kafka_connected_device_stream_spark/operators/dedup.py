@@ -220,8 +220,10 @@ def dedup_ngram_jaccard(
     # queries in one session and an unreleased persist() accumulates
     # across all of them.  Lazy (eager=False): the df aggregation job
     # materializes it as a side effect instead of a dedicated serial
-    # barrier job.  At 100 TB the equivalent is materializing the
-    # inverted index to parquet once and reusing it across dedup tiers.
+    # barrier job — though with AQE on (the engine default) the call
+    # still runs any shuffle map stages below it as a job.  At 100 TB
+    # the equivalent is materializing the inverted index to parquet
+    # once and reusing it across dedup tiers.
     sh = cap_shingle_df(
         shingle_df
         if shingle_df is not None
@@ -414,10 +416,11 @@ def dedup_minhash_lsh(
     # band derivation below it is four md5-of-concat projections the
     # consumers re-derive for free.  Lazy (eager=False): the first job
     # that touches it (the hot-bucket agg) materializes it as a side
-    # effect, so there is no dedicated barrier job serialized before
-    # the real work — that barrier was ~1s of the round-2 bench
-    # regression.  localCheckpoint (not persist): blocks are
-    # GC-reclaimed after the driver drops the result (see
+    # effect, so there is no dedicated barrier job for the final stage
+    # — that barrier was ~1s of the round-2 bench regression.  With
+    # AQE on (the engine default) the call still runs the min-agg's
+    # shuffle map stage as a job.  localCheckpoint (not persist):
+    # blocks are GC-reclaimed after the driver drops the result (see
     # dedup_ngram_jaccard for the rationale).
     sigs = _minhash_signatures(spark, sf_dir, shingle_df).localCheckpoint(
         eager=False

@@ -607,6 +607,28 @@ _MKV_STEP = """
 """
 
 
+# The same rounds as one SQL fold over the edge array `e` (non-NULL
+# from_type) and the type count `k`: pi is a type -> bigint map, and
+# each round keeps exactly the types some edge from a type in the
+# previous round reaches, with the oracle's per-term integer floor
+# pi[from] * n div r[from] (r summed from the same array).
+_MKV_FOLD = """
+aggregate(
+  sequence(1, {iters}),
+  map_from_entries(transform(array_distinct(transform(e, x -> x.from_type)),
+                             t -> struct(t, {scale}L div k))),
+  (pi, i) -> map_from_entries(transform(
+    array_distinct(transform(filter(e, x -> map_contains_key(pi, x.from_type)),
+                             x -> x.to_type)),
+    t -> struct(t, aggregate(
+      filter(e, x -> x.to_type = t AND map_contains_key(pi, x.from_type)),
+      0L,
+      (acc, x) -> acc + pi[x.from_type] * x.n
+        div aggregate(filter(e, y -> y.from_type = x.from_type), 0L,
+                      (r, y) -> r + y.n))))))
+"""
+
+
 @register(
     "events_markov_stationary",
     oracle="WITH "
@@ -629,13 +651,17 @@ _MKV_STEP = """
         "contract), so every round agrees bit-for-bit with the "
         "unrolled-CTE oracle; rounding mass loss is <= |types| "
         "twelfth-decimals per round, invisible at the 6-dp output.  "
-        "Defined on the strongly-connected empirical graph (every "
-        "fixture type both emits and receives transitions).  Scale "
-        "shape: the user-key sequencing shuffle is shared with "
-        "events_markov_transitions; after the |types|^2 aggregate "
-        "(localCheckpoint, read once), each round is a join+agg over "
-        "25 cells x |types| rows — driver-side loop, executor-side "
-        "data, bounded by the type alphabet not the event count.  "
+        "On a graph that is not strongly connected the oracle's "
+        "inner-join semantics hold: a type is in round i only if an "
+        "edge from a type in round i-1 reaches it, and a NULL type "
+        "counts in the uniform start but never joins.  Scale shape: "
+        "the user-key sequencing shuffle is shared with "
+        "events_markov_transitions; the |types|^2 aggregate is "
+        "localCheckpointed, collected into ONE executor-side row "
+        "(coalesce(1), no exchange), and all rounds run as a SQL "
+        "aggregate() fold over that row's edge array — bounded by "
+        "the type alphabet, not the event count, and no Spark job "
+        "per round.  "
         "int64 headroom: pi * n <= 1e12 * n_ij overflows past ~9e6 "
         "transitions per cell — decimal(38,0) swap documented.",
     tags=("events", "stats", "graph"),
@@ -652,26 +678,24 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .localCheckpoint(eager=True)
     )
-    rs = tr.groupBy("from_type").agg(F.sum("n").cast("bigint").alias("r"))
-    types = tr.select(F.col("from_type").alias("t")).distinct()
-    kk = types.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-    pi = types.crossJoin(F.broadcast(kk)).select(
-        "t", F.expr(f"{_MKV_SCALE}L div k").cast("bigint").alias("pi")
+    # The |types|^2 edge list as one row (SinglePartition after
+    # coalesce(1), so the global aggregate needs no exchange); every
+    # round then runs inside one SQL fold over that row.
+    edges = tr.coalesce(1).agg(
+        F.collect_list(F.struct("from_type", "to_type", "n")).alias("all_edges")
     )
-    edges = tr.join(rs, "from_type").localCheckpoint(eager=True)
-    for _ in range(_MKV_ITERS):
-        pi = (
-            edges.join(F.broadcast(pi), edges.from_type == pi.t)
-            .select("to_type", F.expr("pi * n div r").alias("term"))
-            .groupBy("to_type")
-            .agg(F.sum("term").cast("bigint").alias("pi"))
-            .select(F.col("to_type").alias("t"), "pi")
-            .localCheckpoint(eager=True)
-        )
-    return pi.select(
-        F.col("t").alias("event_type"),
-        F.col("pi").alias("pi_scaled"),
-        pround(F.col("pi") / F.lit(float(_MKV_SCALE)), 6).alias("pi"),
+    pi = edges.select(
+        # a NULL from_type counts in k but never joins (and a map key
+        # cannot be NULL)
+        F.expr("filter(all_edges, x -> x.from_type IS NOT NULL)").alias("e"),
+        F.expr("size(array_distinct(transform(all_edges, x -> x.from_type)))").alias("k"),
+    ).select(
+        F.expr(_MKV_FOLD.format(iters=_MKV_ITERS, scale=_MKV_SCALE)).alias("pi")
+    )
+    return pi.select(F.explode("pi").alias("event_type", "pi_scaled")).select(
+        "event_type",
+        "pi_scaled",
+        pround(F.col("pi_scaled") / F.lit(float(_MKV_SCALE)), 6).alias("pi"),
     )
 
 

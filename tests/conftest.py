@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 
 import pytest
@@ -52,3 +53,21 @@ def rocksdb_state_store(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def launched_jobs(spark, fn):
+    """Run `fn()` and return (its result, the number of Spark jobs it
+    launched from this thread).  The listener bus is drained first, so
+    the status tracker has seen every job the body ran."""
+    sc = spark.sparkContext
+    group = f"launched_jobs_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -45,9 +45,13 @@ def _rowset(rows, colnames):
 @pytest.mark.parametrize("name", ORACLE_SPECS)
 def test_query_matches_oracle(spark, duck, name):
     spec = SPECS[name]
+    conf_before = spark.conf.getAll
     sdf = spec.fn(spark, SF_SMALL)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    # session hygiene: building and running a query leaves the
+    # session's conf exactly as it found it
+    assert spark.conf.getAll == conf_before, f"{name}: query changed the session conf"
 
     rel = duck.sql(spec.oracle)
     duck_cols = rel.columns

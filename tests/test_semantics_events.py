@@ -11,6 +11,7 @@ import datetime  # noqa: F401
 import pytest  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from tests.conftest import launched_jobs
 from tests.semantics_fixtures import (  # noqa: F401
     BASE,
     DOCS_SCHEMA,
@@ -386,6 +387,72 @@ def test_markov_stationary_two_state_chain(spark, tmp_path):
     assert abs(out["click"].pi - 0.25) < 0.002
     total = out["view"].pi_scaled + out["click"].pi_scaled
     assert 0 <= 1_000_000_000_000 - total <= 50  # floor losses only
+
+
+def _markov_with_oracle(spark, sf):
+    """events_markov_stationary on a crafted sf_dir, and its registered
+    DuckDB oracle SQL run over the same events file; both as sorted
+    (event_type, pi_scaled, pi) tuples."""
+    import duckdb
+
+    from spark_nifi_kafka_connected_device_stream_spark.operators.events_sessions import (
+        events_markov_stationary,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
+
+    got = sorted(
+        (r.event_type, r.pi_scaled, r.pi)
+        for r in events_markov_stationary(spark, sf).collect()
+    )
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
+    )
+    want = sorted(con.sql(all_specs()["events_markov_stationary"].oracle).fetchall())
+    con.close()
+    return got, want
+
+
+def test_markov_stationary_null_type_counts_in_k_but_never_joins(spark, tmp_path):
+    """view, click, NULL, view, click, view, NULL, click: the NULL type
+    emits (NULL->view, NULL->click), so it is one of k = 3 uniform
+    starting types, but its third of the mass never joins an edge and
+    no NULL key reaches the result.  Edges into NULL are dropped."""
+    seq = ("view", "click", None, "view", "click", "view", None, "click")
+    sf = write_events4(spark, tmp_path, [(i, i * 10, 7, t) for i, t in enumerate(seq)])
+    got, want = _markov_with_oracle(spark, sf)
+    assert got == want
+    assert {t for t, _, _ in got} == {"view", "click"}
+    total = sum(p for _, p, _ in got)
+    assert 0 <= 2 * 1_000_000_000_000 // 3 - total <= 50  # floor losses only
+
+
+def test_markov_stationary_not_strongly_connected(spark, tmp_path):
+    """src -> mid -> view <-> click: `src` only emits and `mid` is
+    reached only from it.  As in the oracle's inner join + GROUP BY, a
+    type is in round i only if an edge from a round i-1 type reaches
+    it, so `src` leaves after round 0 and `mid` after round 1 — they
+    are absent from the result, not present with 0."""
+    seq = ("src", "mid", "view", "click", "view", "click")
+    sf = write_events4(spark, tmp_path, [(i, i * 10, 3, t) for i, t in enumerate(seq)])
+    got, want = _markov_with_oracle(spark, sf)
+    assert got == want
+    assert {t for t, _, _ in got} == {"view", "click"}
+
+
+def test_markov_stationary_construction_jobs(spark):
+    """Building the query in a fresh session launches at most 4 Spark
+    jobs: the events schema read (when not memoized) and the eager
+    checkpoint of the transition counts.  The power rounds run inside
+    one SQL fold at execution, not one checkpoint job per round."""
+    from spark_nifi_kafka_connected_device_stream_spark.operators.events_sessions import (
+        events_markov_stationary,
+    )
+
+    session = spark.newSession()
+    df, jobs = launched_jobs(spark, lambda: events_markov_stationary(session, SF))
+    assert jobs <= 4
+    assert df.count() > 0
 
 
 def test_hill_tail_index_constructed(spark, tmp_path):
