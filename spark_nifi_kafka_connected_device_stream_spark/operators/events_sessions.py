@@ -608,24 +608,28 @@ _MKV_STEP = """
 
 
 # The same rounds as one SQL fold over the edge array `e` (non-NULL
-# from_type) and the type count `k`: pi is a type -> bigint map, and
-# each round keeps exactly the types some edge from a type in the
+# from_type), the type count `k` and the row totals `r` (from_type ->
+# sum of n, built once before the fold): pi is a type -> bigint map,
+# and each round keeps exactly the types some edge from a type in the
 # previous round reaches, with the oracle's per-term integer floor
-# pi[from] * n div r[from] (r summed from the same array).
+# pi[from] * n div r[from].  A round costs O(|types| x |E|) lambda
+# steps, all on the one task that holds the row.
+_MKV_ROW_TOTALS = """
+map_from_entries(transform(array_distinct(transform(e, x -> x.from_type)),
+  f -> struct(f, aggregate(filter(e, x -> x.from_type = f), 0L,
+                           (s, x) -> s + x.n))))
+"""
 _MKV_FOLD = """
 aggregate(
   sequence(1, {iters}),
-  map_from_entries(transform(array_distinct(transform(e, x -> x.from_type)),
-                             t -> struct(t, {scale}L div k))),
+  map_from_entries(transform(map_keys(r), t -> struct(t, {scale}L div k))),
   (pi, i) -> map_from_entries(transform(
     array_distinct(transform(filter(e, x -> map_contains_key(pi, x.from_type)),
                              x -> x.to_type)),
     t -> struct(t, aggregate(
       filter(e, x -> x.to_type = t AND map_contains_key(pi, x.from_type)),
       0L,
-      (acc, x) -> acc + pi[x.from_type] * x.n
-        div aggregate(filter(e, y -> y.from_type = x.from_type), 0L,
-                      (r, y) -> r + y.n))))))
+      (acc, x) -> acc + pi[x.from_type] * x.n div r[x.from_type])))))
 """
 
 
@@ -659,7 +663,9 @@ aggregate(
         "events_markov_transitions; the |types|^2 aggregate is "
         "localCheckpointed, collected into ONE executor-side row "
         "(coalesce(1), no exchange), and all rounds run as a SQL "
-        "aggregate() fold over that row's edge array — bounded by "
+        "aggregate() fold over that row's edge array on ONE task — "
+        "row totals computed once, then O(|types| x |E|) = "
+        "O(|types|^3) interpreted lambda steps per round: bounded by "
         "the type alphabet, not the event count, and no Spark job "
         "per round.  "
         "int64 headroom: pi * n <= 1e12 * n_ij overflows past ~9e6 "
@@ -684,13 +690,15 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = tr.coalesce(1).agg(
         F.collect_list(F.struct("from_type", "to_type", "n")).alias("all_edges")
     )
-    pi = edges.select(
-        # a NULL from_type counts in k but never joins (and a map key
-        # cannot be NULL)
-        F.expr("filter(all_edges, x -> x.from_type IS NOT NULL)").alias("e"),
-        F.expr("size(array_distinct(transform(all_edges, x -> x.from_type)))").alias("k"),
-    ).select(
-        F.expr(_MKV_FOLD.format(iters=_MKV_ITERS, scale=_MKV_SCALE)).alias("pi")
+    pi = (
+        edges.select(
+            # a NULL from_type counts in k but never joins (and a map
+            # key cannot be NULL)
+            F.expr("filter(all_edges, x -> x.from_type IS NOT NULL)").alias("e"),
+            F.expr("size(array_distinct(transform(all_edges, x -> x.from_type)))").alias("k"),
+        )
+        .select("e", "k", F.expr(_MKV_ROW_TOTALS).alias("r"))
+        .select(F.expr(_MKV_FOLD.format(iters=_MKV_ITERS, scale=_MKV_SCALE)).alias("pi"))
     )
     return pi.select(F.explode("pi").alias("event_type", "pi_scaled")).select(
         "event_type",

@@ -15,7 +15,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,17 +30,18 @@ TABLES = (
 )
 
 
-# Analyzed-plan cache: (applicationId, session, session tz, abs sf_dir,
-# table, listing fingerprint) -> DataFrame.  A DataFrame is an
+# Analyzed-plan cache: (applicationId, session, session tz, abs
+# sf_dir, table, listing fingerprint) -> DataFrame.  A DataFrame is an
 # immutable logical plan, so reuse within one session is safe — this
-# skips rebuilding the scan plan for EVERY query in a multi-query
-# session (the driver runs ~90).  Keyed by applicationId so a
-# stopped/rebuilt session can't serve stale plans, and by session
-# timezone because the events plan embeds the tz in its wall-time
-# correction (tests flip tz mid-session); failed reads (bad path) are
-# never cached, so missing-path errors still surface per call.  A
-# fresh session misses this cache; the process-wide schema memo below
-# still spares it the schema-inference job.
+# skips the parquet footer/schema capture (~0.1-0.25s and one Spark job
+# per read.parquet call) that otherwise repeats for EVERY query in a
+# multi-query session (the driver runs ~90).  A fresh session
+# (spark.newSession()) misses the cache and pays that job again per
+# table.  Keyed by applicationId so a stopped/rebuilt session can't
+# serve stale plans, and by session timezone because the events plan
+# embeds the tz in its wall-time correction (tests flip tz
+# mid-session); failed reads (bad path) are never cached, so
+# missing-path errors still surface per call.
 #
 # Bounded LRU (round-17 review): under heavy spark.newSession() churn,
 # per-sibling entries previously accumulated for the application's
@@ -64,39 +64,6 @@ def _cache_put(key: tuple, df: DataFrame) -> None:
     while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
         del _PLAN_CACHE[next(iter(_PLAN_CACHE))]
     _PLAN_CACHE[key] = df
-
-
-# Schema memo: abs path -> (listing fingerprint, inference confs,
-# StructType), one entry per path, shared by every session of the
-# process.  `spark.read.parquet` without a schema runs a Spark job to
-# read footers (~0.1-0.2 s on a warm JVM); with the schema given it
-# runs none.  The plan cache above is per session; this memo spares
-# every fresh session (spark.newSession(), a rebuilt app) that job for
-# each table an earlier session already read.  A new listing
-# fingerprint or a change to any conf that shapes parquet inference
-# replaces the entry.  A StructType is plain Python data, so entries
-# outlive the session that inferred them.
-_SCHEMA_CONFS = (
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema",
-    "spark.sql.legacy.parquet.nanosAsLong",
-)
-_SCHEMA_MEMO: dict[str, tuple[str, tuple, StructType]] = {}
-
-
-def _read_parquet(spark: SparkSession, path: str, fingerprint: str) -> DataFrame:
-    """`spark.read.parquet(path)`, with the schema from the memo when
-    the listing and the inference confs are unchanged."""
-    key = os.path.abspath(path)
-    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    hit = _SCHEMA_MEMO.get(key)
-    if hit is not None and hit[:2] == (fingerprint, confs):
-        return spark.read.schema(hit[2]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_MEMO[key] = (fingerprint, confs, df.schema)
-    return df
 
 
 # Fingerprint memo (ADVICE r12): the full recursive walk + name digest
@@ -233,14 +200,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session executes under ITS conf, not the caller's (round-16
     # review).  id() reuse requires the old session to be collected,
     # at which point replacing its entry is exactly right.
-    fingerprint = _listing_fingerprint(path)
     key = (
         spark.sparkContext.applicationId,
         id(spark),
         spark.conf.get("spark.sql.session.timeZone"),
         os.path.abspath(sf_dir),
         name,
-        fingerprint,
+        _listing_fingerprint(path),
     )
     cached = _PLAN_CACHE.get(key)
     if cached is not None:
@@ -256,7 +222,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ]:
         del _PLAN_CACHE[k]
     if name != "events":
-        df = _read_parquet(spark, path, fingerprint)
+        df = spark.read.parquet(path)
         _cache_put(key, df)
         return df
     # save/restore: the flag is consulted at read() time (schema capture),
@@ -266,7 +232,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prev = spark.conf.get(flag, None)
     spark.conf.set(flag, "true")
     try:
-        df = _read_parquet(spark, path, fingerprint)
+        df = spark.read.parquet(path)
     finally:
         spark.conf.unset(flag) if prev is None else spark.conf.set(flag, prev)
     ts_dtype = dict(df.dtypes).get("ts")

@@ -17,11 +17,8 @@ import pyspark.sql.functions as F
 
 from spark_nifi_kafka_connected_device_stream_spark.sources.catalog import (
     _PLAN_CACHE,
-    _SCHEMA_MEMO,
     load_table,
 )
-
-from .conftest import launched_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -102,77 +99,6 @@ def test_fingerprint_sees_nested_partition_rewrite(tmp_path):
     invalidate_fingerprint(str(top))
     fp3 = _listing_fingerprint(str(top))
     assert fp3 != fp2, "invalidate_fingerprint did not force a re-walk"
-
-
-def _write_region(sf_dir, **columns) -> str:
-    """Write `columns` (name -> pyarrow array) as sf_dir/region.parquet
-    and return its absolute path."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = os.path.abspath(os.path.join(sf_dir, "region.parquet"))
-    pq.write_table(pa.table(columns), path)
-    return path
-
-
-def test_schema_memo_spares_fresh_session_the_inference_job(spark):
-    """The plan cache is per session; the schema memo is not: a second
-    fresh session loading a table the first one inferred launches no
-    Spark job and sees the same schema."""
-    first = load_table(spark.newSession(), SF, "lineitem")
-    second, jobs = launched_jobs(
-        spark, lambda: load_table(spark.newSession(), SF, "lineitem")
-    )
-    assert jobs == 0
-    assert second.schema == first.schema
-
-
-def test_schema_memo_reinfers_after_rewrite(spark, tmp_path):
-    """Rewriting the file with an extra column changes the listing
-    fingerprint, so the next fresh session re-infers the schema."""
-    import pyarrow as pa
-
-    _write_region(tmp_path, r_regionkey=pa.array([0, 1], pa.int32()),
-                  r_name=pa.array(["A", "B"]))
-    assert load_table(spark.newSession(), str(tmp_path), "region").columns == [
-        "r_regionkey", "r_name"]
-    path = _write_region(tmp_path, r_regionkey=pa.array([0, 1], pa.int32()),
-                         r_name=pa.array(["A", "B"]),
-                         r_comment=pa.array(["x", "yy"]))
-    df = load_table(spark.newSession(), str(tmp_path), "region")
-    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
-    assert sorted(df.collect()) == [(0, "A", "x"), (1, "B", "yy")]
-    assert _SCHEMA_MEMO[path][2] == df.schema
-
-
-def test_schema_memo_keyed_by_inference_confs(spark, tmp_path):
-    """A session with spark.sql.parquet.binaryAsString flipped is not
-    served the schema another session inferred without it."""
-    import pyarrow as pa
-
-    _write_region(tmp_path, r_regionkey=pa.array([0], pa.int32()),
-                  r_name=pa.array([b"A"], pa.binary()))
-    sf = str(tmp_path)
-    assert dict(load_table(spark.newSession(), sf, "region").dtypes)["r_name"] == "binary"
-    flipped = spark.newSession()
-    flipped.conf.set("spark.sql.parquet.binaryAsString", "true")
-    assert dict(load_table(flipped, sf, "region").dtypes)["r_name"] == "string"
-    assert dict(load_table(spark.newSession(), sf, "region").dtypes)["r_name"] == "binary"
-
-
-def test_schema_memo_holds_one_entry_per_path(spark, tmp_path):
-    """Rewrites and conf flips replace a path's entry; they never add a
-    second one."""
-    import pyarrow as pa
-
-    before = len(_SCHEMA_MEMO)
-    for n in (1, 2, 3):
-        path = _write_region(tmp_path, r_regionkey=pa.array(range(n), pa.int32()))
-        session = spark.newSession()
-        session.conf.set("spark.sql.parquet.mergeSchema", str(n % 2 == 0).lower())
-        load_table(session, str(tmp_path), "region")
-    assert len(_SCHEMA_MEMO) == before + 1
-    assert path in _SCHEMA_MEMO
 
 
 def test_events_fixture_schema_sentinel(spark):

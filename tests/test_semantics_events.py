@@ -442,9 +442,9 @@ def test_markov_stationary_not_strongly_connected(spark, tmp_path):
 
 def test_markov_stationary_construction_jobs(spark):
     """Building the query in a fresh session launches at most 4 Spark
-    jobs: the events schema read (when not memoized) and the eager
-    checkpoint of the transition counts.  The power rounds run inside
-    one SQL fold at execution, not one checkpoint job per round."""
+    jobs: the events schema read and the eager checkpoint of the
+    transition counts.  The power rounds run inside one SQL fold at
+    execution, not one checkpoint job per round."""
     from spark_nifi_kafka_connected_device_stream_spark.operators.events_sessions import (
         events_markov_stationary,
     )
