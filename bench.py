@@ -42,6 +42,26 @@ BENCH_EXCLUDE: dict[str, str] = {
 HEADLINE = [n for n in all_specs() if n not in BENCH_EXCLUDE]
 
 
+def compact_headline(full: dict) -> dict:
+    """The final stdout line's payload: `full` without the median map,
+    plus the query count and the slowest queries, truncated 5 at a time
+    until the JSON fits in 1500 chars."""
+    timings = full["queries"]
+    compact = {k: v for k, v in full.items() if k != "queries_median"}
+    compact["n_queries"] = len(timings)
+    compact["full_results"] = "BENCH_FULL.json"
+    if "errors" in full:
+        compact["errors"] = {k: v[:60] for k, v in full["errors"].items()}
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])
+    n_keep = len(slowest)
+    while True:
+        compact["queries"] = dict(sorted(slowest[:n_keep], key=lambda kv: kv[0]))
+        if n_keep < len(slowest):
+            compact["queries_truncated_to_slowest"] = n_keep
+        if len(json.dumps(compact)) <= 1500 or n_keep <= 1:
+            return compact
+        n_keep = max(1, n_keep - 5)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -124,22 +144,7 @@ def main() -> None:
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     with open(full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
-    compact = dict(full)
-    del compact["queries_median"]  # full map lives in BENCH_FULL.json
-    compact["n_queries"] = len(timings)
-    compact["full_results"] = "BENCH_FULL.json"
-    if errors:
-        compact["errors"] = {k: v[:60] for k, v in errors.items()}
-    slowest = sorted(timings.items(), key=lambda kv: -kv[1])
-    n_keep = len(slowest)
-    while True:
-        compact["queries"] = dict(sorted(slowest[:n_keep], key=lambda kv: kv[0]))
-        if n_keep < len(slowest):
-            compact["queries_truncated_to_slowest"] = n_keep
-        if len(json.dumps(compact)) <= 1500 or n_keep <= 1:
-            break
-        n_keep = max(1, n_keep - 5)
-    print(json.dumps(compact))
+    print(json.dumps(compact_headline(full)))
     spark.stop()
 
 

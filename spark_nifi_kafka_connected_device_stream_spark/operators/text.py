@@ -2103,7 +2103,6 @@ def documents_gopher_rules_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fixture's 24-character alphabet yields a ~20-30-round merge
 # table (depth varies with SF — the point of a data-driven stop).
 BPE_MERGES = 32  # unroll bound (bounded driver loop, 1-row collect each)
-_BPE_LOOP_MEMO: dict[tuple, tuple] = {}  # see _bpe_merge_loop
 BPE_VOCAB_TARGET = 36
 BPE_PIECES_TOP = 32
 
@@ -2232,23 +2231,20 @@ def _bpe_merge_loop(
     the live piece count (measured, because merges can also absorb
     pieces) left-joined with the pair argmax rides a single job.
 
-    Memoized per (application, session, corpus fingerprint): three
-    registered queries consume this loop, and a multi-query session
-    (the driver runs hundreds) would otherwise re-train the identical
-    merge table per consumer.  The listing fingerprint in the key —
-    the plan-cache staleness contract — makes an in-session fixture
-    rewrite miss the memo instead of serving stale merges."""
-    from ..sources.catalog import _listing_fingerprint
+    Memoized in the session memo (`catalog.session_memo`) per corpus
+    dir: three registered queries consume this loop, and a multi-query
+    session would otherwise re-train the identical merge table per
+    consumer.  The entry stores the corpus listing fingerprint, so an
+    in-session fixture rewrite re-trains instead of serving stale
+    merges."""
+    from ..sources.catalog import listing_fingerprint, session_memo
 
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        os.path.abspath(sf_dir),
-        _listing_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-    )
-    hit = _BPE_LOOP_MEMO.get(key)
-    if hit is not None:
-        return hit
+    memo = session_memo(spark)
+    key = ("bpe", os.path.abspath(sf_dir))
+    fp = listing_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    hit = memo.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
     cur = _bpe_initial_vocab(spark, sf_dir)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, BPE_MERGES + 1):
@@ -2297,9 +2293,7 @@ def _bpe_merge_loop(
     # lazily checkpoint the FINAL vocab too, so every memo consumer
     # shares one materialization instead of replaying the tail rounds
     cur = cur.localCheckpoint(eager=False)
-    while len(_BPE_LOOP_MEMO) >= 8:
-        del _BPE_LOOP_MEMO[next(iter(_BPE_LOOP_MEMO))]
-    _BPE_LOOP_MEMO[key] = (merges, cur)
+    memo[key] = (fp, (merges, cur))
     return merges, cur
 
 

@@ -38,6 +38,10 @@ width, warehouse dir + Hive support) with a scale-aware posture:
 - Python data source filter pushdown on
   (`spark.sql.python.filterPushdown.enabled`, off by default in Spark
   4.1) for every session, so query functions never set it.
+- No console progress bars (`spark.ui.showConsoleProgress=false`).
+  Otherwise a plain script's stderr carries `[Stage 0:> ...]` bars
+  that bury its warnings and errors; progress stays readable from
+  `statusTracker()` and each stream's `lastProgress`.
 
 Every default here is a plain builder conf; `extra_conf` overrides any
 of them, e.g. the FileContext checkpoint manager on HDFS or object
@@ -105,6 +109,7 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.streaming.stopGracefullyOnShutdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     if warehouse_dir:

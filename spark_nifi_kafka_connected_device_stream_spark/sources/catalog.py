@@ -30,120 +30,49 @@ TABLES = (
 )
 
 
-# Analyzed-plan cache: (applicationId, session, session tz, abs
-# sf_dir, table, listing fingerprint) -> DataFrame.  A DataFrame is an
-# immutable logical plan, so reuse within one session is safe — this
-# skips the parquet footer/schema capture (~0.1-0.25s and one Spark job
-# per read.parquet call) that otherwise repeats for EVERY query in a
-# multi-query session (the driver runs ~90).  A fresh session
-# (spark.newSession()) misses the cache and pays that job again per
-# table.  Keyed by applicationId so a stopped/rebuilt session can't
-# serve stale plans, and by session timezone because the events plan
-# embeds the tz in its wall-time correction (tests flip tz
-# mid-session); failed reads (bad path) are never cached, so
-# missing-path errors still surface per call.
+# Per-session memo: load_table keeps one analyzed plan per (session
+# tz, table path).  A DataFrame is an immutable logical plan, so reuse
+# within one session is safe; it skips the parquet footer/schema
+# capture (~0.1-0.25 s and one Spark job per read.parquet call) that
+# otherwise repeats for every query in a multi-query session.
 #
-# Bounded LRU (round-17 review): under heavy spark.newSession() churn,
-# per-sibling entries previously accumulated for the application's
-# lifetime.  A collected-session weakref CANNOT be the eviction signal
-# here — every cached DataFrame strongly references its session
-# (df.sparkSession), so the cache itself pins the session object and
-# the weakref would never die.  Instead the cache is a plain LRU
-# capped at _PLAN_CACHE_MAX entries (recent sessions × tables fit
-# comfortably; an evicted entry just re-pays one ~0.1-0.25 s schema
-# capture), which also releases the pinned session objects of cold
-# siblings so they CAN be collected.
-_PLAN_CACHE: dict[tuple[str, str, str, str, str], DataFrame] = {}
-_PLAN_CACHE_MAX = 128
+# The memo is a dict stored on the SparkSession Python object, so it
+# lives and dies with its session and nothing has to evict it.  A
+# `spark.newSession()` sibling has its own conf, ANSI flag and temp-view
+# namespace, and a stopped-then-rebuilt session is a new object, so
+# neither can be served another session's plan.  The session timezone
+# is in the key because the events plan embeds it in its wall-time
+# correction (tests flip tz mid-session).
+#
+# Each entry also stores the listing fingerprint of the table path: a
+# cached plan captures the FILE LISTING at analysis time, so an
+# in-session rewrite of the same path (the skew/stress tooling does
+# this) would otherwise fail with FAILED_READ_FILE.FILE_NOT_EXIST or
+# silently read stale rows.  The fingerprint is a fresh walk on every
+# call, with no TTL: the walk costs about 15 us on a single-file table
+# and about 18 ms at 1,000 files, against about 1.8 ms of py4j for a
+# warm hit, and any time-based reuse of it would serve a rewrite nested
+# below the top directory stale until it expired.
 
 
-def _cache_put(key: tuple, df: DataFrame) -> None:
-    """LRU insert: evict the least-recently-used entries once the cap
-    is reached (the superseded/app-level evictions in load_table handle
-    correctness; this one only bounds growth)."""
-    while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-        del _PLAN_CACHE[next(iter(_PLAN_CACHE))]
-    _PLAN_CACHE[key] = df
+def session_memo(spark: SparkSession) -> dict:
+    """The per-session memo dict of `spark`, created on first use."""
+    memo = getattr(spark, "_graft_memo", None)
+    if memo is None:
+        memo = spark._graft_memo = {}
+    return memo
 
 
-# Fingerprint memo (ADVICE r12): the full recursive walk + name digest
-# ran on EVERY load_table call — including cache hits — so per-call
-# overhead scaled with the parquet file count, and a driver session
-# makes hundreds of load_table calls per run.  Memoize per path behind
-# a cheap stat pre-check plus a short TTL: reuse while the top dir AND
-# its direct children's (mtime_ns, ino, size) are unchanged AND the
-# entry is young.  Any direct rewrite of the dir (Spark overwrite
-# mints new part files + _SUCCESS in the top dir, bumping its mtime)
-# invalidates instantly; a nested rewrite touching only a partition
-# subdirectory (top dir untouched) bumps that CHILD dir's mtime, which
-# the one-scandir child signature catches (ADVICE r13 — the top-stat-
-# only pre-check reintroduced exactly the staleness class the
-# recursive walk existed to close).  The TTL bounds staleness for
-# rewrites deeper than one level; `invalidate_fingerprint(path)` is
-# the explicit hook for rewrite tooling that can't wait it out.
-_FP_MEMO: dict[str, tuple[float, tuple, str]] = {}
-_FP_TTL_S = 5.0
-
-
-def invalidate_fingerprint(path: str | None = None) -> None:
-    """Drop the fingerprint memo for `path` (or all paths) so the next
-    load_table re-walks the listing immediately.  Fixture-rewrite
-    tooling calls this after an in-place rewrite instead of sleeping
-    out the TTL."""
-    if path is None:
-        _FP_MEMO.clear()
-    else:
-        _FP_MEMO.pop(os.path.abspath(path), None)
-
-
-def _stat_signature(path: str) -> tuple | None:
-    """(mtime_ns, ino, size) of the dir plus each DIRECT child — one
-    non-recursive scandir, cheap at any file count that matters here."""
-    try:
-        st = os.stat(path)
-        sig = [(st.st_mtime_ns, st.st_ino, st.st_size)]
-        if os.path.isdir(path):
-            with os.scandir(path) as it:
-                for entry in sorted(it, key=lambda e: e.name):
-                    try:
-                        est = entry.stat()
-                        sig.append((entry.name, est.st_mtime_ns, est.st_ino, est.st_size))
-                    except OSError:
-                        sig.append((entry.name, -1, -1, -1))
-        return tuple(sig)
-    except OSError:
-        return None
-
-
-def _listing_fingerprint(path: str) -> str:
-    import time
-
-    path = os.path.abspath(path)  # memo key must match invalidate_fingerprint's
-    sig = _stat_signature(path)
-    if sig is None:
-        _FP_MEMO.pop(path, None)
-        return "missing"
-    now = time.monotonic()
-    hit = _FP_MEMO.get(path)
-    if hit is not None and hit[1] == sig and now - hit[0] < _FP_TTL_S:
-        return hit[2]
-    fp = _listing_fingerprint_walk(path)
-    _FP_MEMO[path] = (now, sig, fp)
-    return fp
-
-
-def _listing_fingerprint_walk(path: str) -> str:
+def listing_fingerprint(path: str) -> str:
     """Change-detection key for a parquet path: dir mtime alone misses
     same-second rewrites on coarse (1s) mtime filesystems, so fold in
     the recursive file count, total byte size, the MAX per-file mtime,
     and a digest of the sorted relative file names — a Spark overwrite
     mints fresh UUID part-file names, so even a same-second rewrite
     that happens to preserve count and bytes (deterministic
-    regeneration) perturbs the name digest.  The walk touches only
-    fixture/tooling-scale dirs (this cache exists for the multi-query
-    driver and the in-session rewrite tooling); a cached plan still
-    captures the file LISTING at analysis time, which is exactly what
-    this key invalidates."""
+    regeneration) perturbs the name digest.  A memoized plan captures
+    the file LISTING at analysis time, which is exactly what this key
+    invalidates."""
     import hashlib
 
     if not os.path.exists(path):
@@ -187,44 +116,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # the listing fingerprint (mtime + file count + bytes) is part of
-    # the key: a cached plan captures the FILE LISTING at analysis
-    # time, so an in-session rewrite of the same path (the skew/stress
-    # tooling does this) would otherwise fail with
-    # FAILED_READ_FILE.FILE_NOT_EXIST — or silently read stale rows.
-    # A missing path is never cached: the read below still raises the
-    # clean PATH_NOT_FOUND callers probe for.
-    # id(spark) distinguishes spark.newSession() siblings: they share
-    # an applicationId but have their own session state (conf, ANSI
-    # flag, temp-view namespace), and a DataFrame cached from one
-    # session executes under ITS conf, not the caller's (round-16
-    # review).  id() reuse requires the old session to be collected,
-    # at which point replacing its entry is exactly right.
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        spark.conf.get("spark.sql.session.timeZone"),
-        os.path.abspath(sf_dir),
-        name,
-        _listing_fingerprint(path),
-    )
-    cached = _PLAN_CACHE.get(key)
-    if cached is not None:
-        # refresh LRU recency so an active session's tables stay warm
-        _PLAN_CACHE[key] = _PLAN_CACHE.pop(key)
-        return cached
-    # evict entries from previous applications, and SUPERSEDED
-    # fingerprints of this same (app, session, tz, dir, table) —
-    # repeated in-session fixture rewrites must replace their old
-    # entries, not accumulate them
-    for k in [
-        k for k in _PLAN_CACHE if k[0] != key[0] or (k[:5] == key[:5] and k != key)
-    ]:
-        del _PLAN_CACHE[k]
+    memo = session_memo(spark)
+    key = (spark.conf.get("spark.sql.session.timeZone"), os.path.abspath(path))
+    fp = listing_fingerprint(path)
+    hit = memo.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    df = _read_table(spark, path, name)
+    # a missing path never gets here: the read raises the clean
+    # PATH_NOT_FOUND callers probe for, on every call
+    memo[key] = (fp, df)
+    return df
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """One uncached scan, with the events normalisation of load_table."""
     if name != "events":
-        df = spark.read.parquet(path)
-        _cache_put(key, df)
-        return df
+        return spark.read.parquet(path)
     # save/restore: the flag is consulted at read() time (schema capture),
     # not at execution, so scoping it here keeps later parquet reads in
     # the same session from silently seeing TIMESTAMP(NANOS) as bigint
@@ -258,13 +166,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # instant (isAdjustedToUTC=true) fixture: already epoch micros
         df = df.withColumn("ts_us", F.unix_micros(F.col("ts")))
     else:
-        _cache_put(key, df)
         return df
-    df = df.withColumn(
+    return df.withColumn(
         "ts", F.to_utc_timestamp(F.timestamp_micros(F.col("ts_us")), tz)
     )
-    _cache_put(key, df)
-    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

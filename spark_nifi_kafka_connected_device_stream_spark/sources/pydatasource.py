@@ -277,6 +277,7 @@ class DeviceEventsDataSource(DataSource):
         return _EventsStreamReader(self.options)
 
 
+# JVM sessionUUID, not catalog.session_memo: each foreachBatch epoch has a new Python wrapper
 _REGISTERED_SESSIONS: set[str] = set()
 
 

@@ -368,86 +368,10 @@ def running_totals(
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas: the modern (Spark 4.x) stateful API
-# ---------------------------------------------------------------------------
-
+# the bundled RocksDB state store; the default is the HDFS-backed one
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas moves per-key state through a
-    protobuf-framed state-server channel; without `google.protobuf` the
-    Python state worker crashes at import time mid-batch.  Probe here
-    so callers fail fast at plan construction instead."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(
-    stream: DataFrame, key_col: str = "source", value_col: str = "value"
-) -> DataFrame:
-    """`running_totals` on the transformWithStateInPandas API — the
-    successor to applyInPandasWithState (typed state handles: value/
-    list/map state, timers, TTL) and the API new custom stateful
-    operators should target.  Functionally identical output to
-    `running_totals`: lifetime per-key counts + value totals, one row
-    per key per micro-batch.
-
-    Requires the RocksDB state store (set
-    `spark.sql.streaming.stateStore.providerClass` to the RocksDB
-    provider before starting the query) and the `google.protobuf`
-    package on driver and executors; raises NotImplementedError where
-    the latter is absent (this container) — the applyInPandasWithState
-    twin above is the tested fallback."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(state-server wire protocol); it is not installed here. Use "
-            "running_totals (applyInPandasWithState) instead."
-        )
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", RUNNING_TOTALS_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            te, tv = self._totals.get() if self._totals.exists() else (0, 0.0)
-            be, bv = 0, 0.0
-            for pdf in rows:
-                be += len(pdf)
-                bv += float(pdf["value"].sum())
-            te, tv = te + be, tv + bv
-            self._totals.update((te, tv))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "batch_events": [be],
-                    "total_events": [te],
-                    "total_value": [tv],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    projected = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return projected.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_RunningTotalsProcessor(),
-        outputStructType=RUNNING_TOTALS_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 # ---------------------------------------------------------------------------

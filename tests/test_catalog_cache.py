@@ -1,4 +1,4 @@
-"""The analyzed-plan cache in sources.catalog must be invisible:
+"""The per-session plan memo in sources.catalog must be invisible:
 same results, same semantics, just no repeated schema capture.
 
 Also pins the nanosAsLong save/restore contract (ADVICE r2): the flag
@@ -16,11 +16,22 @@ import os
 import pyspark.sql.functions as F
 
 from spark_nifi_kafka_connected_device_stream_spark.sources.catalog import (
-    _PLAN_CACHE,
     load_table,
+    session_memo,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def _load_bench():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    return bench
 
 
 def test_cache_hit_returns_same_plan(spark):
@@ -58,47 +69,74 @@ def test_cache_keyed_by_timezone(spark):
 
 
 def test_cache_bounded_to_live_session(spark):
-    load_table(spark, SF, "region")
-    app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in _PLAN_CACHE)
+    """The memo lives on the session object: a sibling session never
+    gets another session's DataFrame (each executes under its own
+    conf), and a dropped session is not pinned by the memo.  PySpark
+    may keep the most recently built session reachable from its own
+    state, so at most one of the dropped sessions may stay alive."""
+    import gc
+    import weakref
+
+    mine = load_table(spark, SF, "region")
+    refs = []
+    for _ in range(5):
+        s = spark.newSession()
+        df = load_table(s, SF, "region")
+        assert df is not mine
+        assert load_table(s, SF, "region") is df
+        refs.append(weakref.ref(s))
+        del s, df
+    gc.collect()
+    alive = sum(r() is not None for r in refs)
+    assert alive <= 1, f"{alive} of 5 dropped sessions still alive"
+    assert load_table(spark, SF, "region") is mine
 
 
-def test_fingerprint_sees_nested_partition_rewrite(tmp_path):
-    """ADVICE r13: a rewrite touching ONLY a nested partition
-    subdirectory (top dir stat unchanged) must not serve a stale
-    fingerprint from the memo — the direct-child stat in the pre-check
-    signature catches it, and invalidate_fingerprint() is the explicit
-    hook for anything deeper."""
-    from spark_nifi_kafka_connected_device_stream_spark.sources.catalog import (
-        _listing_fingerprint,
-        invalidate_fingerprint,
-    )
+def test_plan_cache_is_bounded_lru(spark, tmp_path):
+    """The memo holds at most one plan per (session tz, table path):
+    repeated rewrites of one table overwrite its entry instead of
+    piling up superseded plans, so a session's memo stays bounded by
+    the tables it reads.  (No LRU order is kept any more; the bound is
+    the key space, and the whole memo dies with its session.)"""
+    sf = tmp_path / "sf"
+    top = str(sf / "region.parquet")
+    memo = session_memo(spark)
+    before = len(memo)
+    plans = []
+    for i in range(4):
+        rows = spark.createDataFrame([(i, "r")], "r_regionkey int, r_name string")
+        rows.write.mode("overwrite").parquet(top)
+        df = load_table(spark, str(sf), "region")
+        assert [r.r_regionkey for r in df.collect()] == [i]
+        plans.append(df)
+        assert len(memo) == before + 1
+    assert len({id(p) for p in plans}) == 4  # each rewrite re-planned
+    assert load_table(spark, str(sf), "region") is plans[-1]
 
-    top = tmp_path / "t.parquet"
-    part = top / "p=1"
-    part.mkdir(parents=True)
-    (part / "a.bin").write_bytes(b"x" * 10)
-    fp1 = _listing_fingerprint(str(top))
-    # pin the top dir's stat so only the CHILD changes (the exact
-    # staleness scenario: top-dir mtime/ino/size all unchanged)
-    st = os.stat(top)
-    (part / "b.bin").write_bytes(b"y" * 20)
-    os.utime(top, ns=(st.st_atime_ns, st.st_mtime_ns))
-    fp2 = _listing_fingerprint(str(top))  # inside the 5s TTL on purpose
-    assert fp2 != fp1, "nested rewrite served a stale memoized fingerprint"
 
-    # two-level-deep rewrite with child stat pinned: the memo may
-    # legitimately serve the old value inside the TTL — the explicit
-    # invalidate hook must force a fresh walk
-    deep = part / "q=2"
-    deep.mkdir()
-    stc = os.stat(part)
-    (deep / "c.bin").write_bytes(b"z" * 30)
-    os.utime(part, ns=(stc.st_atime_ns, stc.st_mtime_ns))
-    os.utime(top, ns=(st.st_atime_ns, st.st_mtime_ns))
-    invalidate_fingerprint(str(top))
-    fp3 = _listing_fingerprint(str(top))
-    assert fp3 != fp2, "invalidate_fingerprint did not force a re-walk"
+def test_nested_partition_rewrite_is_seen_at_once(spark, tmp_path):
+    """A rewrite two directory levels below the table path, with the
+    top and partition directory mtimes pinned, must be read by the
+    very next load_table call: no time window serves the old plan and
+    no invalidation call is needed."""
+    import shutil
+
+    sf = tmp_path / "sf"
+    top = sf / "region.parquet"
+    rows = spark.createDataFrame([(1, 0, "a")], "r_regionkey int, q int, r_name string")
+    rows.write.partitionBy("q").parquet(str(top / "p=1"))
+    first = load_table(spark, str(sf), "region")
+    assert sorted(r.r_regionkey for r in first.collect()) == [1]
+
+    part, deep = top / "p=1", top / "p=1" / "q=0"
+    st_top, st_part = os.stat(top), os.stat(part)
+    shutil.rmtree(deep)
+    rows = spark.createDataFrame([(2, "b"), (3, "c")], "r_regionkey int, r_name string")
+    rows.write.parquet(str(deep))
+    os.utime(part, ns=(st_part.st_atime_ns, st_part.st_mtime_ns))
+    os.utime(top, ns=(st_top.st_atime_ns, st_top.st_mtime_ns))
+    again = load_table(spark, str(sf), "region")
+    assert sorted(r.r_regionkey for r in again.collect()) == [2, 3]
 
 
 def test_events_fixture_schema_sentinel(spark):
@@ -192,32 +230,25 @@ def test_bench_compact_headline_fits_driver_tail():
     """BENCH_r08.json came back `parsed: null`: the driver records only
     a 2000-char TAIL of bench stdout, and the grown per-query map no
     longer fit.  bench.py now writes the full map to BENCH_FULL.json
-    and emits a compact final line.  Pin the contract: simulate the
-    compact-line construction over MORE queries than the registry will
+    and emits a compact final line.  Pin the contract: run
+    `bench.compact_headline` over MORE queries than the registry will
     plausibly reach and assert the emitted line stays parseable inside
     the tail window with the headline fields intact."""
     import json
 
+    bench = _load_bench()
     timings = {f"query_with_a_rather_long_name_{i:03d}": i / 7.0 for i in range(400)}
-    compact = {
+    full = {
         "metric": "headline_queries_wall_clock",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
+        "queries": timings,
+        "queries_median": timings,
         "sf": 0.1,
         "runs_per_query": 2,
         "aggregation": "min",
-        "n_queries": len(timings),
-        "full_results": "BENCH_FULL.json",
     }
-    slowest = sorted(timings.items(), key=lambda kv: -kv[1])
-    n_keep = len(slowest)
-    while True:
-        compact["queries"] = dict(sorted(slowest[:n_keep], key=lambda kv: kv[0]))
-        if n_keep < len(slowest):
-            compact["queries_truncated_to_slowest"] = n_keep
-        if len(json.dumps(compact)) <= 1500 or n_keep <= 1:
-            break
-        n_keep = max(1, n_keep - 5)
+    compact = bench.compact_headline(full)
     line = json.dumps(compact)
     assert len(line) <= 1500 < 2000
     parsed = json.loads(line)
@@ -254,15 +285,9 @@ def test_bench_list_covers_registry():
     DERIVED from the registry; pin that HEADLINE == registry minus
     BENCH_EXCLUDE, that every exclusion still names a registered query
     (no stale entries), and that each exclusion carries a reason."""
-    import importlib.util
-
     from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _load_bench()
     registered = set(all_specs())
     assert set(bench.HEADLINE) == registered - set(bench.BENCH_EXCLUDE), (
         sorted(registered - set(bench.BENCH_EXCLUDE) - set(bench.HEADLINE))
@@ -273,34 +298,3 @@ def test_bench_list_covers_registry():
     )
     for name, reason in bench.BENCH_EXCLUDE.items():
         assert reason.strip(), f"{name} excluded without a documented reason"
-
-
-def test_plan_cache_is_bounded_lru():
-    """Round-17 review: heavy spark.newSession() churn used to grow
-    _PLAN_CACHE without bound (each sibling's entries lingered for the
-    application's lifetime — and each cached DataFrame pins its
-    session object, so a weakref-based eviction could never fire).
-    The cache is now a capped LRU: inserts beyond the cap evict the
-    least-recently-used entry, and a hit refreshes recency."""
-    from spark_nifi_kafka_connected_device_stream_spark.sources import catalog
-
-    saved, saved_max = dict(catalog._PLAN_CACHE), catalog._PLAN_CACHE_MAX
-    try:
-        catalog._PLAN_CACHE.clear()
-        catalog._PLAN_CACHE_MAX = 4
-        for i in range(10):
-            catalog._cache_put(("app", i, "tz", "d", "t", "f"), object())
-        assert len(catalog._PLAN_CACHE) == 4
-        assert ("app", 9, "tz", "d", "t", "f") in catalog._PLAN_CACHE
-        assert ("app", 0, "tz", "d", "t", "f") not in catalog._PLAN_CACHE
-        # recency refresh: touching the oldest entry must save it from
-        # the next eviction (the load_table hit path does this pop/put)
-        oldest = ("app", 6, "tz", "d", "t", "f")
-        catalog._PLAN_CACHE[oldest] = catalog._PLAN_CACHE.pop(oldest)
-        catalog._cache_put(("app", 10, "tz", "d", "t", "f"), object())
-        assert oldest in catalog._PLAN_CACHE
-        assert ("app", 7, "tz", "d", "t", "f") not in catalog._PLAN_CACHE
-    finally:
-        catalog._PLAN_CACHE_MAX = saved_max
-        catalog._PLAN_CACHE.clear()
-        catalog._PLAN_CACHE.update(saved)

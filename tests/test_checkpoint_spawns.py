@@ -39,10 +39,11 @@ FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
               "FileSystemBasedCheckpointFileManager")
 CHK_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 LIST_KEY = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+PROGRESS_KEY = "spark.ui.showConsoleProgress"
 
 spark = get_session(app_name="spawn-count", master="local[2]", shuffle_partitions=2)
 spark.sparkContext.setLogLevel("ERROR")
-defaults = {k: spark.conf.get(k, None) for k in (CHK_KEY, LIST_KEY)}
+defaults = {k: spark.conf.get(k, None) for k in (CHK_KEY, LIST_KEY, PROGRESS_KEY)}
 
 in_dir = os.path.join(work, "in")
 out_dir = os.path.join(work, "out")
@@ -115,10 +116,12 @@ def test_checkpoint_writes_spawn_no_readlink(tmp_path):
     line = next(ln for ln in out.stdout.splitlines() if ln.startswith("RESULT "))
     res = json.loads(line[len("RESULT "):])
 
-    # both engine defaults set, and extra_conf overrides each of them
+    # the engine defaults set, and extra_conf overrides the two
+    # file-system ones
     assert res["defaults"] == {
         "spark.sql.streaming.checkpointFileManagerClass": res["fs_manager"],
         "spark.sql.sources.parallelPartitionDiscovery.parallelism": res["cpus"],
+        "spark.ui.showConsoleProgress": "false",
     }
     assert res["overridden"] == {
         "spark.sql.streaming.checkpointFileManagerClass": "x.Manager",

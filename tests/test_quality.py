@@ -693,11 +693,9 @@ def test_bpe_train_merges_hand_example_and_determinism(spark, tmp_path):
     ], got
     # after the 3 merges the vocab is fully merged: the loop stops early
     assert len(got) == 3
-    # clear the per-session memo so the second run actually RE-TRAINS
-    # (round 17 memoizes the loop; without this the determinism check
-    # would just read the cache back)
-    T._BPE_LOOP_MEMO.clear()
-    again = [tuple(r) for r in T.text_bpe_train_merges(spark, d).collect()]
+    # a fresh session has an empty memo, so the second run actually
+    # RE-TRAINS instead of reading the first run's merge table back
+    again = [tuple(r) for r in T.text_bpe_train_merges(spark.newSession(), d).collect()]
     assert again == got
 
 

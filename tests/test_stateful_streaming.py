@@ -332,49 +332,6 @@ def test_resolve_tz_region_offset_and_invalid():
     assert _resolve_tz("+18:00").utcoffset(None) == timedelta(hours=18)
 
 
-def test_running_totals_tws_gated_or_equivalent(spark, tmp_path):
-    """transformWithStateInPandas twin of running_totals: without
-    google.protobuf it must fail fast with an actionable error at plan
-    construction (not mid-batch on an executor); with it, the output
-    contract matches running_totals."""
-    import pytest
-
-    from spark_nifi_kafka_connected_device_stream_spark.streaming.stateful import (
-        running_totals_tws,
-        tws_available,
-    )
-
-    d = str(tmp_path / "in")
-    _write_file(d, "b1.json", [e[2] for e in _mk_events(0, 30)])  # 10/source
-    stream = parse_product_views(
-        json_file_stream(spark, d, max_files_per_trigger=1)
-    ).withColumn("value", F.lit(2.5))
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="google.protobuf"):
-            running_totals_tws(stream, key_col="source", value_col="value")
-        return
-    epochs = []
-
-    def collect(df, _epoch):
-        rows = df.collect()
-        if rows:
-            epochs.append({r["key"]: (r["total_events"], r["total_value"]) for r in rows})
-
-    with rocksdb_state_store(spark):
-        totals = running_totals_tws(stream, key_col="source", value_col="value")
-        q = (
-            totals.writeStream.foreachBatch(collect)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "chk"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert epochs and epochs[0]["desktop"] == (10, 25.0)
-
-
 def test_session_expiry_letter_offset_tz_fails_fast(spark, tmp_path):
     """Letter-offset session tz (GMT+8) cannot cross the Arrow
     timestamp transfer (pyarrow/pytz rejects the string); the operator
