@@ -1129,11 +1129,13 @@ def dedup_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..registry import _REGISTRY as _REG  # noqa: E402  (intra-module reuse)
 
 
+# The oracle's two composed CTEs are MATERIALIZED: each is read twice
+# (its count and the hit join), which DuckDB otherwise inlines.
 @register(
     "dedup_lsh_recall_report",
     oracle=f"""
-    WITH truth AS ({_REG["dedup_ngram_jaccard"].oracle}),
-    cand AS ({_REG["dedup_minhash_lsh"].oracle}),
+    WITH truth AS MATERIALIZED ({_REG["dedup_ngram_jaccard"].oracle}),
+    cand AS MATERIALIZED ({_REG["dedup_minhash_lsh"].oracle}),
     t AS (SELECT CAST(count(*) AS BIGINT) AS n_true_pairs FROM truth),
     c AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM cand),
     h AS (

@@ -156,22 +156,25 @@ def _dedup_clusters_oracle() -> str:
     (SQL fragments imported from operators.dedup so the two stay in
     lockstep), then cluster_id = min reachable node.  Set-semantics
     UNION makes the recursion terminate and the result deterministic,
-    so the driver can value-check what was previously rows-only."""
+    so the driver can value-check what was previously rows-only.  Its
+    own CTEs are MATERIALIZED: DuckDB otherwise inlines every reference,
+    and the LSH chain ran once per reference (24 s at sf0.001, 2 s
+    materialized)."""
     from .dedup import _DUCK_SIGS, MAX_BUCKET_SIZE
 
     return f"""
     WITH RECURSIVE {_DUCK_SIGS},
-    bucket_sizes AS (
+    bucket_sizes AS MATERIALIZED (
       SELECT band_id, bucket, count(*) AS n FROM bands GROUP BY band_id, bucket
-    ), capped AS (
+    ), capped AS MATERIALIZED (
       SELECT b.doc_id, b.band_id, b.bucket
       FROM bands b JOIN bucket_sizes s USING (band_id, bucket)
       WHERE s.n <= {MAX_BUCKET_SIZE}
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM capped a JOIN capped b
         ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT doc_a, doc_b FROM pairs
       UNION ALL
       SELECT doc_b, doc_a FROM pairs
@@ -269,22 +272,23 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cluster_stats_oracle() -> str:
     """Cluster-size accounting over the same transitive closure the
-    dedup_clusters oracle computes — grouped by cluster size."""
+    dedup_clusters oracle computes — grouped by cluster size, with the
+    same MATERIALIZED CTEs."""
     from .dedup import _DUCK_SIGS, MAX_BUCKET_SIZE
 
     return f"""
     WITH RECURSIVE {_DUCK_SIGS},
-    bucket_sizes AS (
+    bucket_sizes AS MATERIALIZED (
       SELECT band_id, bucket, count(*) AS n FROM bands GROUP BY band_id, bucket
-    ), capped AS (
+    ), capped AS MATERIALIZED (
       SELECT b.doc_id, b.band_id, b.bucket
       FROM bands b JOIN bucket_sizes s USING (band_id, bucket)
       WHERE s.n <= {MAX_BUCKET_SIZE}
-    ), pairs AS (
+    ), pairs AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM capped a JOIN capped b
         ON a.band_id = b.band_id AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ), edges AS (
+    ), edges AS MATERIALIZED (
       SELECT doc_a, doc_b FROM pairs
       UNION ALL
       SELECT doc_b, doc_a FROM pairs

@@ -724,11 +724,14 @@ PAGERANK_ITERS = 5
 
 
 def _pagerank_oracle() -> str:
+    # Every CTE is MATERIALIZED: each round reads the previous one
+    # twice and DuckDB otherwise inlines every reference, so the rounds
+    # re-ran the kNN self-join (28 s at sf0.001, 0.4 s materialized).
     prev = "r0"
     iters = []
     for i in range(1, PAGERANK_ITERS + 1):
         iters.append(f"""
-    r{i} AS (
+    r{i} AS MATERIALIZED (
       SELECT p.label, p.vec_id,
              CAST((15 * {PAGERANK_SCALE}) // (100 * nc.n)
                   + coalesce(c.s, 0) AS BIGINT) AS r
@@ -745,7 +748,7 @@ def _pagerank_oracle() -> str:
     )""")
         prev = f"r{i}"
     return f"""
-    WITH edges AS (
+    WITH edges AS MATERIALIZED (
       SELECT label, src, dst FROM (
         SELECT q.label, q.vec_id AS src, c.vec_id AS dst,
                row_number() OVER (PARTITION BY q.vec_id
@@ -754,14 +757,14 @@ def _pagerank_oracle() -> str:
           ON c.label = q.label AND c.vec_id <> q.vec_id
       ) WHERE rnk <= {KNN_GRAPH_K}
     ),
-    deg AS (
+    deg AS MATERIALIZED (
       SELECT label, src, CAST(count(*) AS BIGINT) AS k
       FROM edges GROUP BY label, src
     ),
-    ncell AS (
+    ncell AS MATERIALIZED (
       SELECT label, CAST(count(*) AS BIGINT) AS n FROM deg GROUP BY label
     ),
-    r0 AS (
+    r0 AS MATERIALIZED (
       SELECT d.label, d.src AS vec_id,
              CAST({PAGERANK_SCALE} // n.n AS BIGINT) AS r
       FROM deg d JOIN ncell n ON n.label = d.label

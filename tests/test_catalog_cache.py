@@ -279,22 +279,28 @@ def test_coverage_registry_index_complete():
     assert not missing, f"stale registry index, missing: {missing[:10]}"
 
 
-def test_bench_list_covers_registry():
-    """VERDICT r9 item 3: 85 registered queries had silently drifted
-    out of bench.py's hand-maintained HEADLINE list.  The list is now
-    DERIVED from the registry; pin that HEADLINE == registry minus
-    BENCH_EXCLUDE, that every exclusion still names a registered query
-    (no stale entries), and that each exclusion carries a reason."""
-    from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
-
+def test_bench_measure_drops_failed_query(spark):
+    """A query that raises is reported in `errors`, drops out of
+    `queries` and the total, and marks the record `partial`; the other
+    query is still timed on every run.  The failing query raises on its
+    SECOND run, so a first-run time must not survive the failure."""
     bench = _load_bench()
-    registered = set(all_specs())
-    assert set(bench.HEADLINE) == registered - set(bench.BENCH_EXCLUDE), (
-        sorted(registered - set(bench.BENCH_EXCLUDE) - set(bench.HEADLINE))
-        or sorted(set(bench.HEADLINE) - registered)
-    )
-    assert set(bench.BENCH_EXCLUDE) <= registered, sorted(
-        set(bench.BENCH_EXCLUDE) - registered
-    )
-    for name, reason in bench.BENCH_EXCLUDE.items():
-        assert reason.strip(), f"{name} excluded without a documented reason"
+    calls = {"ok": 0, "bad": 0}
+
+    def ok(s, sf_dir):
+        calls["ok"] += 1
+        return load_table(s, sf_dir, "nation")
+
+    def bad(s, sf_dir):
+        calls["bad"] += 1
+        if calls["bad"] == 2:
+            raise RuntimeError("boom on run 2")
+        return load_table(s, sf_dir, "region")
+
+    full = bench.measure(spark, {"ok": ok, "bad": bad}, SF, 2)
+    assert set(full["errors"]) == {"bad"} and "boom on run 2" in full["errors"]["bad"]
+    assert full["partial"] is True
+    assert set(full["queries"]) == set(full["queries_median"]) == {"ok"}
+    assert calls == {"ok": 2, "bad": 2} and full["runs_per_query"] == 2
+    assert full["queries"]["ok"] <= full["queries_median"]["ok"]
+    assert full["value"] == full["queries"]["ok"] and full["sf"] == 0.001

@@ -19,11 +19,11 @@ from .conftest import SF_SMALL
 SPECS = registry.all_specs()
 ORACLE_SPECS = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 ROWS_ONLY_SPECS = sorted(n for n, s in SPECS.items() if s.oracle is None)
-# Per-oracle DuckDB time budget at sf0.001.  The slowest oracles took
-# 21-23 s on 4 cores (dedup_clusters, dedup_cluster_stats,
-# embedding_pagerank_centrality); two that re-evaluated inlined CTEs
-# once took 74 s and 114 s, and a slowdown of that kind must fail by
-# name instead of eating the suite's timeout.
+# Per-oracle DuckDB time budget at sf0.001.  The slowest oracles take
+# 6-7 s on 4 cores (embedding_near_dup_bucketed,
+# dedup_lsh_recall_report); oracles that re-evaluated inlined CTEs
+# once took 24-114 s, and a slowdown of that kind must fail by name
+# instead of eating the suite's timeout.
 ORACLE_BUDGET_S = 60.0
 
 

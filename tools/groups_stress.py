@@ -17,7 +17,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,6 +32,7 @@ def main() -> int:
     sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
+    from bench import timed_runs
     from spark_nifi_kafka_connected_device_stream_spark.session import get_session
 
     spark = get_session(app_name="groups_stress")
@@ -78,16 +78,13 @@ def main() -> int:
       GROUP BY a.custkey, a.okey
     """
 
-    def run(sql: str) -> float:
-        best = float("inf")
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            spark.sql(sql).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
-    t_engine = run(engine_sql)
-    t_naive = run(naive_sql)
+    t_engine, t_naive = (
+        round(min(timed_runs(
+            lambda: spark.sql(sql).write.format("noop").mode("overwrite").save(),
+            args.runs,
+        )), 3)
+        for sql in (engine_sql, naive_sql)
+    )
 
     # correctness: both forms must agree row-for-row
     diff = (

@@ -27,12 +27,13 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import timed_runs
+from spark_nifi_kafka_connected_device_stream_spark.session import default_parallelism, get_session
 
 SKEW_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -59,13 +60,8 @@ def confs(spark, pairs):
             spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
 
 
-def best_of(fn, runs=2):
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        fn()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+def best_of(fn):
+    return round(min(timed_runs(fn, 2)), 3)
 
 
 def main() -> None:
@@ -74,15 +70,7 @@ def main() -> None:
     ap.add_argument("--dir", default="/tmp/skew_stress")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "16")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .appName("skew-stress")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="skew-stress", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     from spark_nifi_kafka_connected_device_stream_spark.operators.analytics import (
@@ -106,7 +94,7 @@ def main() -> None:
         orders_rows=max(8_000, args.rows // 30),
     )
 
-    out = {"rows": args.rows, "cpus": int(cpus)}
+    out = {"rows": args.rows, "cpus": default_parallelism()}
 
     # --- 1. the skewed big-big join, AQE skew split on vs off ---
     # each timed run builds a FRESH DataFrame: re-collecting one df

@@ -51,14 +51,16 @@ def vhash(cols, rows):
 
 
 def main() -> int:
+    sys.path.insert(0, REPO)
+    from spark_nifi_kafka_connected_device_stream_spark.session import default_parallelism
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--cpus", type=int, default=16)
+    ap.add_argument("--cpus", type=int, default=default_parallelism())
     ap.add_argument("--only", nargs="*", help="restrict to these queries")
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -73,6 +75,8 @@ def main() -> int:
                 except (ValueError, KeyError):
                     pass
 
+    # a plain builder on purpose: it stands in for the external
+    # driver's own session, which lacks session.get_session's defaults
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.sql.shuffle.partitions", str(args.cpus))
