@@ -176,14 +176,14 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH shing0 AS (
+    WITH shing0 AS MATERIALIZED (
       SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM documents
     ), freq AS (
       SELECT shingle, count(*) AS df FROM shing0 GROUP BY shingle
-    ), shing AS (
+    ), shing AS MATERIALIZED (
       SELECT s.doc_id, s.shingle FROM shing0 s JOIN freq USING (shingle)
       WHERE df <= {MAX_SHINGLE_DF}
-    ), sizes AS (
+    ), sizes AS MATERIALIZED (
       SELECT doc_id, count(*) AS n FROM shing GROUP BY doc_id
     ), inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -251,14 +251,14 @@ def dedup_ngram_jaccard(
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH shing0 AS (
+    WITH shing0 AS MATERIALIZED (
       SELECT doc_id, unnest({_DUCK_SHINGLES}) AS shingle FROM documents
     ), freq AS (
       SELECT shingle, count(*) AS df FROM shing0 GROUP BY shingle
-    ), shing AS (
+    ), shing AS MATERIALIZED (
       SELECT s.doc_id, s.shingle FROM shing0 s JOIN freq USING (shingle)
       WHERE df <= {MAX_SHINGLE_DF}
-    ), sizes AS (
+    ), sizes AS MATERIALIZED (
       SELECT doc_id, count(*) AS n FROM shing GROUP BY doc_id
     ), inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
@@ -387,9 +387,9 @@ _DUCK_SIGS = f"""
     "dedup_minhash_lsh",
     oracle=f"""
     WITH {_DUCK_SIGS},
-    bucket_sizes AS (
+    bucket_sizes AS MATERIALIZED (
       SELECT band_id, bucket, count(*) AS n FROM bands GROUP BY band_id, bucket
-    ), capped AS (
+    ), capped AS MATERIALIZED (
       SELECT b.doc_id, b.band_id, b.bucket
       FROM bands b JOIN bucket_sizes s USING (band_id, bucket)
       WHERE s.n <= {MAX_BUCKET_SIZE}

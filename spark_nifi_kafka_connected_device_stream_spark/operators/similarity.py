@@ -1523,11 +1523,17 @@ def embedding_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
         F.floor(F.col("x").cast("double") * _SIL_SCALE + F.lit(0.5))
         .cast("bigint")
         .alias("xq"),
-    ).localCheckpoint(eager=False)
+    )
+    # EAGER checkpoints: `pts` feeds three stages and `cent` two, which
+    # AQE runs concurrently.  A lazy checkpoint is cut from its lineage
+    # when the first job over it ends; a sibling task still computing it
+    # then reports metrics of a plan the driver has already collected
+    # ("non-existent accumulator" errors once a GC runs in between).
+    pts = pts.localCheckpoint(eager=True)
     cent = (
         pts.groupBy(F.col("label").alias("clabel"), "dim")
         .agg(F.sum("xq").cast("bigint").alias("s"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     cnorm = cent.groupBy("clabel").agg(
         F.sum(F.col("s") * F.col("s")).cast("bigint").alias("ns2")

@@ -581,8 +581,3 @@ class DeviceAuditDataSource(DataSource):
 
     def writer(self, schema, overwrite: bool):
         return _AuditWriter(self.options, overwrite)
-
-
-def register_audit_sink(spark) -> None:
-    """Back-compat alias: register_python_sources covers all formats."""
-    spark.dataSource.register(DeviceAuditDataSource)

@@ -10,6 +10,19 @@ Each helper returns a configured `DataStreamWriter` (caller invokes
 - warehouse DDL (K5, dag:68-81)        → warehouse.create_external_table
 - JDBC export (K6, dag:83-90)          → warehouse.jdbc_export
 - memory (test harness, SURVEY.md §5)  → memory_sink
+
+The persistent foreachBatch stores are one function per store, called
+once per micro-batch as `fn(batch_df, epoch_id, ...)`; a stream binds
+the store's arguments with `functools.partial`, e.g.
+`df.writeStream.foreachBatch(partial(corpus_dedup_epoch, corpus_dir=c,
+out_dir=o))`, and a test calls the same function directly to replay
+an epoch:
+
+- exact corpus dedup (fingerprint store)   → corpus_dedup_epoch
+- SCD2 dimension (`v=` full snapshots)      → scd2_upsert_epoch
+- aggregate MV (`v=` per-key sum/count)     → agg_upsert_epoch
+- fuzzy MinHash corpus dedup (band store)   → fuzzy_corpus_dedup_epoch
+- IVFPQ code index (`cid`-partitioned)      → ivfpq_index_epoch
 """
 
 from __future__ import annotations
@@ -145,25 +158,41 @@ def _read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        condition = (
-            exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
-        )
-        if condition not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
         return None
 
 
-def foreach_batch_corpus_dedup(
-    df: DataFrame,
+def _previous_version(
+    spark: SparkSession, store_dir: str, epoch_id: int
+) -> DataFrame | None:
+    """The rows of a `v=`-partitioned store's latest version below
+    `epoch_id`, without `v`, or None when there is none.  One store
+    read serves both the `max(v)` probe and the rows; the filter on
+    the partition column prunes the scan to that version's files."""
+    store = _read_store_or_none(spark, store_dir)
+    if store is None:
+        return None
+    prev = store.filter(F.col("v") < epoch_id).agg(F.max("v")).first()[0]
+    if prev is None:
+        return None
+    return store.filter(F.col("v") == prev).drop("v")
+
+
+def corpus_dedup_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
     corpus_dir: str,
     out_dir: str,
     fingerprint_col: str = "fingerprint",
-) -> DataStreamWriter:
+) -> None:
     """Ingest-time dedup against a PERSISTENT corpus fingerprint store —
     the streaming front door of the batch `dedup_incremental_exact`
     tier: each micro-batch keeps only fingerprints never seen in ANY
     earlier batch (across restarts, beyond any watermark horizon,
-    where `streaming_dedup_exact`'s in-state dedup ends).
+    where `streaming_dedup_exact`'s in-state dedup ends).  A stream
+    runs it through
+    `foreachBatch(partial(corpus_dedup_epoch, corpus_dir=c, out_dir=o))`.
 
     Per epoch: (1) in-batch dedup; (2) probe the store with the batch
     fingerprints — the corpus side is scanned map-side with the SMALL
@@ -176,26 +205,10 @@ def foreach_batch_corpus_dedup(
     writes go to `epoch=<id>` partition directories with overwrite
     mode, and the probe reads only partitions with epoch < current
     (partition-pruned), so a re-run neither double-writes nor drops
-    its own rows against its own half-written store partition.
+    its own rows against its own half-written store partition: calling
+    this twice with the same epoch_id leaves the store and output
+    byte-for-byte equivalent.
     """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        corpus_dedup_epoch(batch_df, epoch_id, corpus_dir, out_dir, fingerprint_col)
-
-    return df.writeStream.foreachBatch(fn)
-
-
-def corpus_dedup_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    corpus_dir: str,
-    out_dir: str,
-    fingerprint_col: str = "fingerprint",
-) -> None:
-    """One epoch of foreach_batch_corpus_dedup, module-level so the
-    crashed-epoch re-run path is unit-testable: calling this twice
-    with the same epoch_id must leave the store and output byte-for-
-    byte equivalent (partition overwrite + epoch < N probe)."""
     spark = batch_df.sparkSession
     batch = batch_df.dropDuplicates([fingerprint_col])
     store = _read_store_or_none(spark, corpus_dir)
@@ -216,151 +229,22 @@ def corpus_dedup_epoch(
     )
 
 
-# Bloom summary sizing for the accelerated ingest-dedup path.  Matches
-# the batch audit (operators/relational.orders_bloom_prefilter_bound):
-# 2^18 bits / 3 hashes holds ~30k keys at <5% FP — re-size per corpus.
-BLOOM_DEDUP_M = 1 << 18
-BLOOM_DEDUP_K = 3
-
-
-def _bloom_positions(df: DataFrame, col: str) -> DataFrame:
-    """k xxhash64 bit positions per key — one `pos` column."""
-    hashes = F.array(*[F.lit(i) for i in range(BLOOM_DEDUP_K)])
-    return df.withColumn("_h", F.explode(hashes)).select(
-        F.col(col).alias("_key"),
-        F.pmod(F.xxhash64(col, "_h"), F.lit(BLOOM_DEDUP_M)).alias("pos"),
-    )
-
-
-def foreach_batch_corpus_dedup_bloom(
-    df: DataFrame,
-    corpus_dir: str,
-    out_dir: str,
-    bloom_dir: str,
-    fingerprint_col: str = "fingerprint",
-) -> DataStreamWriter:
-    """`foreach_batch_corpus_dedup` accelerated by a persistent Bloom
-    summary of the store — the streaming twin of the
-    `orders_bloom_prefilter_bound` admissibility argument.
-
-    The exact path probes the full corpus store every epoch.  Here a
-    bounded bit-position table (`bloom_dir/epoch=N` partitions, the
-    cell-wise-union of per-epoch bits — Bloom filters are unioned by
-    bit OR, i.e. a distinct-position table) screens the batch first:
-
-    - Bloom has NO false negatives, so a key whose bits are not all
-      set is PROVABLY new — the store probe runs only on the
-      surviving candidates (false positives + true dups).
-    - An all-new batch (the append-mostly common case) skips the
-      corpus scan entirely: the screen runs against the small bit
-      table, never the 100 TB store.
-
-    Output is therefore byte-equivalent to the exact path —
-    `test_streaming.py` asserts it — while the per-epoch store-side
-    cost drops from |store| to |bits| + |candidates|-bounded probes.
-    Exactly-once follows the same epoch-partition overwrite contract
-    as the exact path (bloom bits included: epoch < N reads,
-    overwrite-on-rerun).
-    """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        corpus_dedup_bloom_epoch(
-            batch_df, epoch_id, corpus_dir, out_dir, bloom_dir, fingerprint_col
-        )
-
-    return df.writeStream.foreachBatch(fn)
-
-
-def corpus_dedup_bloom_epoch(
+def scd2_upsert_epoch(
     batch_df: DataFrame,
     epoch_id: int,
-    corpus_dir: str,
-    out_dir: str,
-    bloom_dir: str,
-    fingerprint_col: str = "fingerprint",
-) -> None:
-    """One epoch of the Bloom-screened corpus dedup (module-level for
-    the re-run idempotence and exact-equivalence tests)."""
-    spark = batch_df.sparkSession
-    batch = batch_df.dropDuplicates([fingerprint_col])
-    bloom_store = _read_store_or_none(spark, bloom_dir)
-    first_epoch = False
-    if bloom_store is not None:
-        bits = bloom_store.filter(F.col("epoch") < epoch_id).select("pos").distinct()
-    else:
-        # the bits are DERIVED state: a missing bloom_dir does NOT mean
-        # an empty corpus (a pipeline may have run the exact path
-        # before, or the bits were retention-cleaned).  Rebuild from
-        # the corpus store when it exists — treating this as "first
-        # epoch" would skip the probe and write duplicates permanently.
-        corpus_store = _read_store_or_none(spark, corpus_dir)
-        if corpus_store is not None:
-            corpus_prev = corpus_store.filter(F.col("epoch") < epoch_id)
-            bits = (
-                _bloom_positions(corpus_prev, fingerprint_col)
-                .select("pos")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        else:
-            first_epoch = True
-    if first_epoch:
-        fresh = batch
-    else:
-        candidates = (
-            _bloom_positions(batch, fingerprint_col)
-            .join(F.broadcast(bits), "pos", "left_semi")
-            .groupBy("_key")
-            .agg(F.count(F.lit(1)).alias("_n_hit"))
-            .where(F.col("_n_hit") == BLOOM_DEDUP_K)
-            .select(F.col("_key").alias(fingerprint_col))
-        ).localCheckpoint(eager=True)
-        if candidates.isEmpty():
-            # every batch key is provably unseen: no store scan at all
-            fresh = batch
-        else:
-            corpus_store = _read_store_or_none(spark, corpus_dir)
-            if corpus_store is None:
-                # bloom bits without a corpus (retention-cleaned):
-                # every candidate was a false positive
-                corpus_store = spark.createDataFrame(
-                    [], batch.select(fingerprint_col).withColumn(
-                        "epoch", F.lit(0)
-                    ).schema
-                )
-            corpus = corpus_store.filter(F.col("epoch") < epoch_id)
-            seen = corpus.join(
-                F.broadcast(candidates), fingerprint_col, "left_semi"
-            ).select(fingerprint_col)
-            fresh = batch.join(F.broadcast(seen), fingerprint_col, "left_anti")
-    fresh = fresh.localCheckpoint(eager=True)
-    fresh.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-    fresh.select(fingerprint_col).write.mode("overwrite").parquet(
-        f"{corpus_dir}/epoch={epoch_id}"
-    )
-    (
-        _bloom_positions(fresh, fingerprint_col)
-        .select("pos")
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{bloom_dir}/epoch={epoch_id}")
-    )
-
-
-def foreach_batch_scd2_upsert(
-    df: DataFrame,
     store_dir: str,
     key: str,
     attrs: tuple[str, ...],
     effective_col: str = "effective_ts",
-) -> DataStreamWriter:
+) -> None:
     """Streaming SCD2 dimension maintenance — the CDC-consumer twin of
     the batch `scd2_customer_batch` operator: each micro-batch of
     change records is merged into a versioned dimension store with the
     SAME `operators.scd.scd2_apply` merge (latest-effective-wins
     in-batch dedupe, close-at-effective-ts, null-safe attribute
     compare), so a streaming-maintained dimension and a batch rebuild
-    can never disagree.
+    can never disagree.  A stream runs it through
+    `foreachBatch(partial(scd2_upsert_epoch, store_dir=..., key=..., attrs=...))`.
 
     Store layout: `v=<epoch>` parquet partitions, each the FULL SCD2
     state after that epoch.  Epoch N reads the latest version `< N`
@@ -373,37 +257,14 @@ def foreach_batch_scd2_upsert(
     snapshot write is dimension-sized, not fact-sized — the standard
     SCD2 cost model.
     """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        scd2_upsert_epoch(batch_df, epoch_id, store_dir, key, attrs, effective_col)
-
-    return df.writeStream.foreachBatch(fn)
-
-
-def scd2_upsert_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    store_dir: str,
-    key: str,
-    attrs: tuple[str, ...],
-    effective_col: str = "effective_ts",
-) -> None:
-    """One epoch of foreach_batch_scd2_upsert, module-level so the
-    crashed-epoch re-run path is unit-testable: calling this twice with
-    the same epoch_id must leave the store byte-for-byte equivalent."""
     from pyspark.sql.types import StructField, StructType
 
     from ..operators.scd import scd2_apply
 
     spark = batch_df.sparkSession
     eff_field = batch_df.schema[effective_col]
-    store = _read_store_or_none(spark, store_dir)
-    prev = (
-        store.filter(F.col("v") < epoch_id).agg(F.max("v")).first()[0]
-        if store is not None
-        else None
-    )
-    if prev is None:
+    current = _previous_version(spark, store_dir, epoch_id)
+    if current is None:
         state_schema = StructType(
             [batch_df.schema[key]]
             + [batch_df.schema[a] for a in attrs]
@@ -413,25 +274,24 @@ def scd2_upsert_epoch(
             ]
         )
         current = spark.createDataFrame([], state_schema)
-    else:
-        current = (
-            spark.read.parquet(store_dir).filter(F.col("v") == prev).drop("v")
-        )
     nxt = scd2_apply(current, batch_df, key, list(attrs), effective_col)
     nxt.write.mode("overwrite").parquet(f"{store_dir}/v={epoch_id}")
 
 
-def foreach_batch_agg_upsert(
-    df: DataFrame,
+def agg_upsert_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
     store_dir: str,
     keys: tuple[str, ...],
     value_col: str,
-) -> DataStreamWriter:
+) -> None:
     """Incremental aggregate materialized view — per-key running
     sum/count maintained from the stream into a versioned parquet
     store.  The lambda-architecture MV: unlike the in-state running
     totals (`stateful.running_totals`, applyInPandasWithState), the
-    result here lives as PLAIN PARQUET any batch reader can scan.
+    result here lives as PLAIN PARQUET any batch reader can scan.  A
+    stream runs it through
+    `foreachBatch(partial(agg_upsert_epoch, store_dir=..., keys=..., value_col=...))`.
 
     Epoch N: partial-aggregate the batch (map-side combinable), read
     the latest store version `< N` (partition-pruned), union +
@@ -451,22 +311,6 @@ def foreach_batch_agg_upsert(
     a new store_dir (or seed it as `v=-1`); continuing blindly
     overwrites low-numbered versions and abandons the prior totals.
     """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        agg_upsert_epoch(batch_df, epoch_id, store_dir, keys, value_col)
-
-    return df.writeStream.foreachBatch(fn)
-
-
-def agg_upsert_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    store_dir: str,
-    keys: tuple[str, ...],
-    value_col: str,
-) -> None:
-    """One epoch of foreach_batch_agg_upsert, module-level so the
-    crashed-epoch re-run path is unit-testable."""
     spark = batch_df.sparkSession
     part = (
         batch_df.groupBy(*keys)
@@ -475,12 +319,7 @@ def agg_upsert_epoch(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         )
     )
-    store = _read_store_or_none(spark, store_dir)
-    prev = (
-        store.filter(F.col("v") < epoch_id).agg(F.max("v")).first()[0]
-        if store is not None
-        else None
-    )
+    prev = _previous_version(spark, store_dir, epoch_id)
     if prev is None:
         merged = part
     else:
@@ -490,10 +329,8 @@ def agg_upsert_epoch(
         # one more row every epoch and its total never sums.  groupBy
         # treats NULL as one group — the correct upsert semantics —
         # and costs the same single keys-shuffle.
-        cur = (
-            spark.read.parquet(store_dir)
-            .filter(F.col("v") == prev)
-            .select(*keys, "total", F.col("n_rows").cast("bigint").alias("n_rows"))
+        cur = prev.select(
+            *keys, "total", F.col("n_rows").cast("bigint").alias("n_rows")
         )
         merged = (
             part.unionByName(cur)
@@ -530,18 +367,21 @@ FUZZY_STORE_BPFX = 16  # hex digits -> 16 prefixes per band
 FUZZY_COMPACT_EVERY = 8
 
 
-def foreach_batch_corpus_dedup_fuzzy(
-    df: DataFrame,
+def fuzzy_corpus_dedup_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
     sig_store_dir: str,
     out_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     compact_every: int | None = FUZZY_COMPACT_EVERY,
-) -> DataStreamWriter:
+) -> None:
     """Ingest-time NEAR-duplicate dedup against a persistent MinHash
     signature store — the streaming front door of the batch
     `dedup_incremental_minhash_assign` tier, exactly as
-    `foreach_batch_corpus_dedup` fronts `dedup_incremental_exact`.
+    `corpus_dedup_epoch` fronts `dedup_incremental_exact`.  A stream
+    runs it through
+    `foreachBatch(partial(fuzzy_corpus_dedup_epoch, sig_store_dir=s, out_dir=o))`.
     Each micro-batch's documents are signature-hashed once; the
     persistent store's band buckets are probed with the (small,
     broadcast) batch bands; any batch doc whose best store candidate
@@ -572,47 +412,17 @@ def foreach_batch_corpus_dedup_fuzzy(
     pinned by the rerun test, same contract as the exact sink.
 
     Store maintenance is SELF-DRIVING (round 17, VERDICT r16 item 3):
-    every `compact_every` epochs the sink folds the per-batch epoch
-    dirs with `compact_fuzzy_signature_store` (below) — one dir per
-    micro-batch is the small-files trap at ingest cadence, and a
-    long-running ingest must bound its own file count rather than
-    rely on an operator remembering a manual maintenance call.  The
-    cadence honors the newest-epoch guard (`upto = epoch - 1`, driver-
-    side, after the epoch's own append), so crash re-delivery of the
-    latest epoch stays safe; pass compact_every=None to disable and
-    manage compaction externally.
+    every `compact_every`-th epoch additionally folds the store's
+    history into `epoch=epoch_id-1` with `compact_fuzzy_signature_store`
+    (below) AFTER this epoch's append, keeping the store's epoch-dir
+    count <= N + 1 over any run length — one dir per micro-batch is
+    the small-files trap at ingest cadence, and a long-running ingest
+    must bound its own file count rather than rely on an operator
+    remembering a manual maintenance call.  The newest epoch — this
+    one — stays un-compacted (the crash-re-delivery guard), so crash
+    re-delivery of the latest epoch stays safe; pass
+    compact_every=None to disable and manage compaction externally.
     """
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        fuzzy_corpus_dedup_epoch(
-            batch_df,
-            epoch_id,
-            sig_store_dir,
-            out_dir,
-            id_col,
-            text_col,
-            compact_every=compact_every,
-        )
-
-    return df.writeStream.foreachBatch(fn)
-
-
-def fuzzy_corpus_dedup_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    sig_store_dir: str,
-    out_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    compact_every: int | None = None,
-) -> None:
-    """One epoch of foreach_batch_corpus_dedup_fuzzy, module-level so
-    the crashed-epoch re-run path is unit-testable (same doctrine as
-    corpus_dedup_epoch).  With `compact_every=N`, every N-th epoch
-    additionally folds the store's history into `epoch=epoch_id-1`
-    AFTER this epoch's append (the newest epoch — this one — stays
-    un-compacted per the crash-re-delivery guard), keeping the store's
-    epoch-dir count <= N + 1 over any run length."""
     from pyspark.sql import Window
 
     from ..functions.textfns import normalize_text, shingles, tokens
@@ -948,37 +758,6 @@ def train_ivfpq_index_model(spark: SparkSession, sf_dir: str, model_dir: str) ->
     )
 
 
-def foreach_batch_embedding_index_ivfpq(
-    df: DataFrame,
-    index_dir: str,
-    model_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = FUZZY_COMPACT_EVERY,
-) -> DataStreamWriter:
-    """Streaming IVFPQ index ingest: each micro-batch's embeddings are
-    encoded to (vec_id, cid, m, k) code rows — the IVFADC at-rest
-    layout of similarity_topk_ivfpq, via the LITERALLY shared encode
-    helpers (operators/similarity_ann.ivfpq_subvectors/codes), so the
-    store can never drift from what the batch query would compute —
-    and land as the store's `epoch=N` partition, sub-partitioned by
-    the IVF cell id so a serving probe partition-prunes to its
-    nprobe cells.
-
-    Exactly-once: the epoch dir is overwritten on re-delivery (the
-    fuzzy-store contract); nothing reads the store during encode, so
-    a crashed-epoch re-run is trivially idempotent.  Store maintenance
-    is self-driving on the same cadence as the fuzzy sink
-    (compact_every epochs, newest epoch never absorbed)."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        ivfpq_index_epoch(
-            batch_df, epoch_id, index_dir, model_dir, id_col, vec_col, compact_every
-        )
-
-    return df.writeStream.foreachBatch(fn)
-
-
 def ivfpq_index_epoch(
     batch_df: DataFrame,
     epoch_id: int,
@@ -986,13 +765,26 @@ def ivfpq_index_epoch(
     model_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    compact_every: int | None = None,
+    compact_every: int | None = FUZZY_COMPACT_EVERY,
 ) -> None:
-    """One epoch of foreach_batch_embedding_index_ivfpq, module-level
-    so the crashed-epoch re-run path is unit-testable (the fuzzy-sink
-    doctrine).  Per epoch: one broadcast-sized model read, a
-    broadcast-NLJ cell assignment, a broadcast codebook encode, one
-    partitioned write — the corpus store is never read."""
+    """Streaming IVFPQ index ingest: each micro-batch's embeddings are
+    encoded to (vec_id, cid, m, k) code rows — the IVFADC at-rest
+    layout of similarity_topk_ivfpq, via the LITERALLY shared encode
+    helpers (operators/similarity_ann.ivfpq_subvectors/codes), so the
+    store can never drift from what the batch query would compute —
+    and land as the store's `epoch=N` partition, sub-partitioned by
+    the IVF cell id so a serving probe partition-prunes to its
+    nprobe cells.  A stream runs it through
+    `foreachBatch(partial(ivfpq_index_epoch, index_dir=i, model_dir=m))`.
+
+    Per epoch: one broadcast-sized model read, a broadcast-NLJ cell
+    assignment, a broadcast codebook encode, one partitioned write —
+    the corpus store is never read.  Exactly-once: the epoch dir is
+    overwritten on re-delivery (the fuzzy-store contract); nothing
+    reads the store during encode, so a crashed-epoch re-run is
+    trivially idempotent.  Store maintenance is self-driving on the
+    same cadence as the fuzzy sink (compact_every epochs, newest epoch
+    never absorbed; None disables it)."""
     from ..operators import _kmeans as _km
     from ..operators.similarity_ann import ivfpq_codes, ivfpq_subvectors
 

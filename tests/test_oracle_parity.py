@@ -19,8 +19,9 @@ from .conftest import SF_SMALL
 SPECS = registry.all_specs()
 ORACLE_SPECS = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 ROWS_ONLY_SPECS = sorted(n for n, s in SPECS.items() if s.oracle is None)
-# Per-oracle DuckDB time budget at sf0.001.  The slowest oracles take
-# 6-7 s on 4 cores (embedding_near_dup_bucketed,
+# Per-oracle DuckDB time budget at sf0.001.  The slowest oracle takes
+# ~6 s on 4 cores (embedding_near_dup_bucketed) and the next ones 2-3 s
+# (similarity_lsh_buckets, dedup_incremental_minhash_assign,
 # dedup_lsh_recall_report); oracles that re-evaluated inlined CTEs
 # once took 24-114 s, and a slowdown of that kind must fail by name
 # instead of eating the suite's timeout.

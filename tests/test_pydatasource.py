@@ -230,10 +230,10 @@ def test_audit_writer_commit_protocol(spark, tmp_path):
     import os
 
     from spark_nifi_kafka_connected_device_stream_spark.sources.pydatasource import (
-        register_audit_sink,
+        register_python_sources,
     )
 
-    register_audit_sink(spark)
+    register_python_sources(spark)
     d = str(tmp_path / "audit")
     df = spark.range(60).selectExpr("id", "id % 7 AS bucket").repartition(3)
     df.write.format("device_audit").option("path", d).mode("append").save()

@@ -5,6 +5,7 @@ must survive across micro-batches).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -438,7 +439,7 @@ def test_foreach_batch_corpus_dedup_across_restart(spark, tmp_path):
     drop re-ingested content ACROSS query restarts (beyond watermark
     state, which dies with the query) — first arrival wins globally."""
     from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        foreach_batch_corpus_dedup,
+        corpus_dedup_epoch,
     )
 
     d = str(tmp_path / "in")
@@ -453,7 +454,9 @@ def test_foreach_batch_corpus_dedup_across_restart(spark, tmp_path):
             F.md5(F.concat_ws("|", "userid", "productid", "timestamp").cast("binary")),
         )
         q = (
-            foreach_batch_corpus_dedup(fp, corpus, out)
+            fp.writeStream.foreachBatch(
+                functools.partial(corpus_dedup_epoch, corpus_dir=corpus, out_dir=out)
+            )
             .option("checkpointLocation", chk)
             .trigger(availableNow=True)
             .start()
@@ -943,7 +946,7 @@ def test_scd2_upsert_store_drift_raises(spark, tmp_path):
 def test_scd2_upsert_through_live_stream(spark, tmp_path):
     """The SCD2 sink through a REAL file stream (not direct epoch
     calls): two micro-batches of CDC records delivered via
-    json_file_stream + foreach_batch_scd2_upsert must leave the store's
+    json_file_stream + foreachBatch(scd2_upsert_epoch) must leave the store's
     final version equal to the batch scd2_apply chain."""
     import json
 
@@ -959,7 +962,7 @@ def test_scd2_upsert_through_live_stream(spark, tmp_path):
         json_file_stream,
     )
     from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        foreach_batch_scd2_upsert,
+        scd2_upsert_epoch,
     )
 
     in_dir = tmp_path / "in"
@@ -976,7 +979,11 @@ def test_scd2_upsert_through_live_stream(spark, tmp_path):
     raw = json_file_stream(spark, str(in_dir), max_files_per_trigger=1)
     cdc = raw.select(F.from_json("value", schema).alias("r")).select("r.*")
     q = (
-        foreach_batch_scd2_upsert(cdc, store, "cust_id", ("segment",))
+        cdc.writeStream.foreachBatch(
+            functools.partial(
+                scd2_upsert_epoch, store_dir=store, key="cust_id", attrs=("segment",)
+            )
+        )
         .option("checkpointLocation", ckpt)
         .start()
     )
@@ -1041,68 +1048,6 @@ def test_agg_upsert_mv_equals_batch_aggregate(spark, tmp_path):
     # crash-replay epoch 1: byte-equivalent, no double counting
     agg_upsert_epoch(b1, 1, store, ("k",), "x")
     assert state(1) == expect
-
-
-def test_corpus_dedup_bloom_equivalent_to_exact(spark, tmp_path):
-    """The Bloom-screened ingest dedup must produce byte-equivalent
-    output to the exact path on the same epoch sequence — Bloom has no
-    false negatives, so no true duplicate can slip through, and false
-    positives only cost an extra exact probe.  Epoch 2 is all-new
-    (the screen's skip-the-store fast path) and must still keep
-    everything."""
-    from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        corpus_dedup_bloom_epoch,
-        corpus_dedup_epoch,
-    )
-
-    batches = [
-        spark.createDataFrame([("fpA", 1), ("fpB", 2)], "fingerprint string, v int"),
-        spark.createDataFrame(
-            [("fpB", 3), ("fpC", 4), ("fpA", 5)], "fingerprint string, v int"
-        ),
-        spark.createDataFrame([("fpD", 6), ("fpE", 7)], "fingerprint string, v int"),
-    ]
-    ex_corpus, ex_out = str(tmp_path / "exc"), str(tmp_path / "exo")
-    bl_corpus, bl_out = str(tmp_path / "blc"), str(tmp_path / "blo")
-    bloom = str(tmp_path / "bloom")
-    for i, b in enumerate(batches):
-        corpus_dedup_epoch(b, i, ex_corpus, ex_out)
-        corpus_dedup_bloom_epoch(b, i, bl_corpus, bl_out, bloom)
-    exact = sorted(tuple(r) for r in spark.read.parquet(ex_out).collect())
-    screened = sorted(tuple(r) for r in spark.read.parquet(bl_out).collect())
-    assert screened == exact
-    assert sorted(r["fingerprint"] for r in spark.read.parquet(bl_out).collect()) == [
-        "fpA", "fpB", "fpC", "fpD", "fpE",
-    ]
-
-    # crash-replay the overlap epoch: output and stores must not change
-    corpus_dedup_bloom_epoch(batches[1], 1, bl_corpus, bl_out, bloom)
-    again = sorted(tuple(r) for r in spark.read.parquet(bl_out).collect())
-    assert again == screened
-    store = sorted(r["fingerprint"] for r in spark.read.parquet(bl_corpus).collect())
-    assert store == ["fpA", "fpB", "fpC", "fpD", "fpE"]
-
-
-def test_corpus_dedup_bloom_drift_raises(spark, tmp_path):
-    """The Bloom path keeps the exact path's strictness: a bloom store
-    that exists but is malformed must raise, not silently disable the
-    screen."""
-    import pytest as _pytest
-    from pyspark.errors import AnalysisException
-
-    from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        corpus_dedup_bloom_epoch,
-    )
-
-    bloom = str(tmp_path / "bloom")
-    spark.createDataFrame([("x",)], "wrong_col string").write.parquet(
-        f"{bloom}/epoch=0"
-    )
-    b1 = spark.createDataFrame([("fpA", 1)], "fingerprint string, v int")
-    with _pytest.raises(AnalysisException):
-        corpus_dedup_bloom_epoch(
-            b1, 1, str(tmp_path / "c"), str(tmp_path / "o"), bloom
-        )
 
 
 class _FakeGroupState:
@@ -1173,27 +1118,24 @@ def test_agg_upsert_merges_null_key_group(spark, tmp_path):
     assert rows["a"] == (6.0, 3)
 
 
-def test_bloom_dedup_rebuilds_bits_from_existing_corpus(spark, tmp_path):
-    """A missing bloom_dir with an EXISTING corpus store (exact-path
-    history, or bits retention-cleaned) must rebuild the bits and keep
-    deduplicating — treating it as 'first epoch' admitted duplicates
-    permanently."""
+def test_agg_upsert_store_drift_raises(spark, tmp_path):
+    """Only a MISSING store may mean 'first epoch' — an aggregate store
+    whose version-partition column is absent (schema drift) must
+    raise, not silently restart the running totals from empty."""
+    from pyspark.errors import AnalysisException
+
     from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        corpus_dedup_bloom_epoch,
-        corpus_dedup_epoch,
+        agg_upsert_epoch,
     )
 
-    corpus = str(tmp_path / "corpus")
-    out = str(tmp_path / "out")
-    bloom = str(tmp_path / "bloom")  # never written before the switch
-    b0 = spark.createDataFrame([("f1", 1), ("f2", 2)], "fingerprint string, x int")
-    corpus_dedup_epoch(b0, 0, corpus, out)  # exact path seeds the corpus
-    # switch to the bloom path: f1 is a known duplicate, f3 is fresh
-    b1 = spark.createDataFrame([("f1", 3), ("f3", 4)], "fingerprint string, x int")
-    corpus_dedup_bloom_epoch(b1, 1, corpus, out, bloom)
-    fresh = {r["fingerprint"] for r in
-             spark.read.parquet(f"{out}/epoch=1").collect()}
-    assert fresh == {"f3"}, fresh  # f1 screened out via rebuilt bits
+    store = str(tmp_path / "mv")
+    # store exists but is NOT version-partitioned → no `v` column
+    spark.createDataFrame(
+        [("a", 3.0, 2)], "k string, total double, n_rows bigint"
+    ).write.parquet(store)
+    b1 = spark.createDataFrame([("a", 4.0)], "k string, x double")
+    with pytest.raises(AnalysisException):
+        agg_upsert_epoch(b1, 1, store, ("k",), "x")
 
 
 def test_interval_join_supports_same_named_timestamp_columns(spark):
@@ -1421,7 +1363,7 @@ def test_fuzzy_corpus_dedup_through_live_stream(spark, tmp_path):
     import json as _json
 
     from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
-        foreach_batch_corpus_dedup_fuzzy,
+        fuzzy_corpus_dedup_epoch,
     )
 
     d = str(tmp_path / "in")
@@ -1438,7 +1380,11 @@ def test_fuzzy_corpus_dedup_through_live_stream(spark, tmp_path):
             .json(d)
         )
         q = (
-            foreach_batch_corpus_dedup_fuzzy(stream, store, out)
+            stream.writeStream.foreachBatch(
+                functools.partial(
+                    fuzzy_corpus_dedup_epoch, sig_store_dir=store, out_dir=out
+                )
+            )
             .option("checkpointLocation", chk)
             .trigger(availableNow=True)
             .start()
