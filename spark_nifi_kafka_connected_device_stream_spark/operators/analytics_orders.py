@@ -308,15 +308,13 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     completion = li.groupBy("l_orderkey").agg(F.max("l_shipdate").alias("done"))
-    j = o.join(completion, o.o_orderkey == completion.l_orderkey).localCheckpoint(
-        eager=False
-    )
-    deltas = (
-        j.select(F.col("o_orderdate").alias("day"), F.lit(1).alias("delta"))
-        .unionByName(
-            j.select(
-                F.date_add(F.col("done"), 1).alias("day"),
-                F.lit(-1).alias("delta"),
+    j = o.join(completion, o.o_orderkey == completion.l_orderkey)
+    # both boundaries of each order from one pass over the join
+    deltas = j.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("o_orderdate").alias("day"), F.lit(1).alias("delta")),
+                F.struct(F.date_add(F.col("done"), 1).alias("day"), F.lit(-1).alias("delta")),
             )
         )
     )

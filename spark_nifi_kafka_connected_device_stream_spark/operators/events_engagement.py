@@ -372,9 +372,12 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # license seats, serving replicas) the hourly volume series cannot
 # give you.  Sweep-line: every session contributes (+1 at start, −1 at
 # end+1µs) boundary events; the peak is the max of the global running
-# sum over the boundary stream.  The running sum uses
-# functions.scale.global_running_sum (range-repartitioned parallel
-# sort + broadcast per-partition offsets), NEVER an unpartitioned
+# sum over the boundary stream.  Only the max is needed, not every
+# row's running value, so the stream is never joined back to offsets:
+# it is range-partitioned on its total order, each segment reduces to
+# (sum, best local prefix, its instant), and a one-row SQL fold over
+# the ≤ shuffle.partitions segment summaries, in segment order, adds
+# each segment's offset to its local best.  NEVER an unpartitioned
 # window over the boundary stream.  All values are exact integers.
 # ---------------------------------------------------------------------------
 
@@ -431,15 +434,20 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "instant do overlap.  Returns session count, the peak, and "
         "the first microsecond it was reached.  Scale shape: ONE "
         "user-key shuffle carries sessionization and the interval "
-        "collapse; the boundary stream's running sum is "
-        "functions/scale.global_running_sum — range-repartitioned "
-        "parallel sort with broadcast per-partition offsets, the "
-        "only unpartitioned window runs over |partitions| metadata "
-        "rows.  Integer-exact end to end.",
+        "collapse; each interval explodes to its two boundaries, "
+        "which are range-repartitioned on the total order; each "
+        "range segment's running sum reduces to one summary row "
+        "(segment sum, max of (local prefix, -t), acquire count), and "
+        "one SQL aggregate() fold over the ≤ shuffle.partitions "
+        "summaries in segment order carries the offset and keeps the "
+        "best (offset + local prefix, -t) — the global max prefix and "
+        "its first instant, ties to the earlier t.  One lineage: no "
+        "checkpoint, no join back onto the boundary rows, no "
+        "unpartitioned window.  Integer-exact end to end.",
     tags=("events", "session", "timeseries"),
 )
 def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.scale import global_running_sum
+    from ..functions.scale import plan_parallelism
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.col("ts_us").alias("us")
@@ -452,44 +460,63 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(prev.isNull() | ((F.col("us") - prev) >= 1_800_000_000), 1).otherwise(0),
     )
     sessions = flagged.withColumn("session_seq", F.sum("new_session").over(wrun))
-    intervals = (
-        sessions.groupBy("user_id", "session_seq")
-        .agg(
-            F.min("us").cast("bigint").alias("start_us"),
-            (F.max("us") + 1).cast("bigint").alias("end_us"),
-        )
-        .localCheckpoint(eager=False)
+    intervals = sessions.groupBy("user_id", "session_seq").agg(
+        F.min("us").cast("bigint").alias("start_us"),
+        (F.max("us") + 1).cast("bigint").alias("end_us"),
     )
     bounds = intervals.select(
-        F.col("start_us").alias("t"), F.lit(1).alias("delta"), "user_id", "session_seq"
-    ).unionByName(
-        intervals.select(
-            F.col("end_us").alias("t"),
-            F.lit(-1).alias("delta"),
-            "user_id",
-            "session_seq",
+        F.inline(
+            F.array(
+                F.struct(F.col("start_us").alias("t"), F.lit(1).alias("delta")),
+                F.struct(F.col("end_us").alias("t"), F.lit(-1).alias("delta")),
+            )
+        ),
+        "user_id",
+        "session_seq",
+    )
+    order = [F.asc("t"), F.asc("delta"), F.asc("user_id"), F.asc("session_seq")]
+    # _pid is read in this one branch only (nothing joins back on it),
+    # so the range segments need no checkpoint to stay identical.
+    ranged = bounds.repartitionByRange(plan_parallelism(spark), *order).withColumn(
+        "_pid", F.spark_partition_id()
+    )
+    w_seg = (
+        Window.partitionBy("_pid")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    segments = (
+        ranged.withColumn("local_run", F.sum("delta").over(w_seg))
+        .groupBy("_pid")
+        .agg(
+            F.sum("delta").alias("seg"),
+            F.max(F.struct(F.col("local_run").alias("run"), (-F.col("t")).alias("neg_t")))
+            .alias("best"),
+            F.count_if(F.col("delta") == 1).alias("n_start"),
         )
     )
-    run = global_running_sum(
-        bounds,
-        [F.asc("t"), F.asc("delta"), F.asc("user_id"), F.asc("session_seq")],
-        "delta",
-        "conc",
-        # consumed twice (peak + first-peak-instant): materialize once
-    ).localCheckpoint(eager=False)
-    peak = run.agg(F.max("conc").cast("bigint").alias("peak_concurrency"))
-    n_sessions = intervals.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sessions")
+    # Segments in range order; `off` is the running sum of every
+    # earlier segment, and greatest() ignores the NULL starting best.
+    peak = segments.agg(
+        F.coalesce(F.sum("n_start"), F.lit(0)).alias("n_sessions"),
+        F.expr(
+            """
+            aggregate(
+              sort_array(collect_list(struct(_pid, seg, best))),
+              named_struct('off', 0L,
+                           'best', CAST(NULL AS struct<run: bigint, neg_t: bigint>)),
+              (acc, s) -> named_struct(
+                'off', acc.off + s.seg,
+                'best', greatest(acc.best, named_struct('run', acc.off + s.best.run,
+                                                        'neg_t', s.best.neg_t))),
+              acc -> acc.best)
+            """
+        ).alias("best"),
     )
-    peak_at = (
-        run.crossJoin(F.broadcast(peak))
-        .filter(F.col("conc") == F.col("peak_concurrency"))
-        .agg(F.min("t").cast("bigint").alias("peak_at_us"))
-    )
-    return (
-        n_sessions.crossJoin(F.broadcast(peak))
-        .crossJoin(F.broadcast(peak_at))
-        .select("n_sessions", "peak_concurrency", "peak_at_us")
+    return peak.select(
+        "n_sessions",
+        F.col("best.run").alias("peak_concurrency"),
+        (-F.col("best.neg_t")).alias("peak_at_us"),
     )
 
 

@@ -5,6 +5,8 @@ dims broadcast, no gratuitous shuffles.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from spark_nifi_kafka_connected_device_stream_spark.plans import (
@@ -79,6 +81,21 @@ def test_broadcast_threshold_respected_for_fact_join(spark):
     assert joined.count() > 0
 
 
+def _window_partition_keys(text, fn=""):
+    """The FIRST argument of every `<fn>windowspecdefinition(...)` in an
+    explain string.  A windowspecdefinition lists partition columns
+    first, then the ORDER BY entries, then the frame; the spec is cut at
+    the frame marker (nested parens make a [^)]* capture truncate
+    early), so this is the partition key, not merely a column that
+    appears somewhere before an ASC token."""
+    keys = []
+    for m in re.finditer(re.escape(fn) + r"windowspecdefinition\(", text):
+        frame = text.find("specifiedwindowframe", m.end())
+        assert frame != -1, "windowspecdefinition without a frame spec"
+        keys.append(text[m.end():frame].split(",")[0])
+    return keys
+
+
 def test_rfm_has_no_unpartitioned_data_window(spark):
     """customer_rfm_segments must not sort the per-customer table through
     one task: every window over DATA rows is partitioned by _pid (the
@@ -86,25 +103,27 @@ def test_rfm_has_no_unpartitioned_data_window(spark):
     unpartitioned windows are the running-offset sums over per-partition
     COUNTS — constant-size metadata at any scale — recognizable by
     operating on the _cnt aggregate."""
-    import re
-
-    from spark_nifi_kafka_connected_device_stream_spark.plans import explain_str
-
     df = SPECS["customer_rfm_segments"].fn(spark, SF_SMALL)
     text = explain_str(df)
     assert "ntile(" not in text  # replaced by arithmetic on exact ranks
-    # A windowspecdefinition lists partition columns first, then the
-    # ORDER BY entries, then the frame.  Capture up to the frame marker
-    # (nested parens make a [^)]* capture truncate early) and assert the
-    # FIRST spec argument is the _pid partition key — not merely that
-    # _pid appears somewhere before an ASC token.
-    starts = [m.end() for m in re.finditer(r"row_number\(\) windowspecdefinition\(", text)]
-    assert starts, "expected at least one row_number window in the RFM plan"
-    for s in starts:
-        frame = text.find("specifiedwindowframe", s)
-        assert frame != -1, "windowspecdefinition without a frame spec"
-        spec = text[s:frame]
-        assert "_pid" in spec.split(",")[0], f"unpartitioned row_number: {spec}"
+    keys = _window_partition_keys(text, "row_number() ")
+    assert keys, "expected at least one row_number window in the RFM plan"
+    for key in keys:
+        assert "_pid" in key, f"unpartitioned row_number: {key}"
+
+
+def test_peak_concurrency_windows_are_partitioned(spark):
+    """events_peak_concurrency must not sort the boundary stream through
+    one task, nor join anything back onto it: every window is
+    partitioned by user_id (sessionization) or _pid (the range segment
+    of the boundary stream), and the plan has no broadcast join."""
+    text = explain_str(SPECS["events_peak_concurrency"].fn(spark, SF_SMALL))
+    assert "BroadcastNestedLoopJoin" not in text
+    assert "BroadcastHashJoin" not in text
+    keys = _window_partition_keys(text)
+    assert keys, "expected windows in the peak-concurrency plan"
+    for key in keys:
+        assert re.match(r"(user_id|_pid)#", key), f"window not partitioned by user_id or _pid: {key}"
 
 
 def test_global_ntile_matches_sql_ntile_all_remainders(spark):

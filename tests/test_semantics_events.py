@@ -23,6 +23,35 @@ from tests.semantics_fixtures import (  # noqa: F401
     write_events6,
 )
 
+
+def _peak_with_oracle(session, sf):
+    """events_peak_concurrency on a crafted sf_dir, and its registered
+    DuckDB oracle SQL run over the same events file; both as one
+    (n_sessions, peak_concurrency, peak_at_us) tuple."""
+    import duckdb
+
+    from spark_nifi_kafka_connected_device_stream_spark.operators.events_engagement import (
+        events_peak_concurrency,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.registry import all_specs
+
+    (got,) = [tuple(r) for r in events_peak_concurrency(session, sf).collect()]
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
+    )
+    (want,) = con.sql(all_specs()["events_peak_concurrency"].oracle).fetchall()
+    con.close()
+    return got, want
+
+
+def _base_us():
+    """The fixtures' BASE instant as epoch micros (stored as UTC)."""
+    return int(
+        datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp() * 1_000_000
+    )
+
+
 def test_peak_concurrency_sweep_semantics(spark, tmp_path):
     """Three users: sessions [0s..100s], [50s..60s], [10000s..10000s].
     The first two overlap (peak 2, first reached at the 50s acquire);
@@ -45,12 +74,92 @@ def test_peak_concurrency_sweep_semantics(spark, tmp_path):
     row = events_peak_concurrency(spark, sf).collect()[0]
     assert row.n_sessions == 3
     assert row.peak_concurrency == 2
-    base_us = int(
-        datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc).timestamp() * 1_000_000
-    )
     # peak first reached when user 2's session opens at +50s — the
     # stored wall-instant is fixture-utc, matching ts_us
-    assert row.peak_at_us == base_us + 50_000_000
+    assert row.peak_at_us == _base_us() + 50_000_000
+
+
+def test_peak_concurrency_empty_events(spark, tmp_path):
+    """No events: no sessions, and no peak or peak instant (NULL, as
+    max() and min() over no rows are in the oracle)."""
+    sf = write_events4(spark, tmp_path, [])
+    got, want = _peak_with_oracle(spark, sf)
+    assert got == want == (0, None, None)
+
+
+def test_peak_concurrency_back_to_back_releases_first(spark, tmp_path):
+    """User 1's session occupies [0s, 100s + 1µs), user 2's opens at
+    100s + 1µs and occupies through 200s + 1µs, user 3's opens there.
+    At each shared instant the release sorts before the acquire, so the
+    sessions never overlap: the peak is 1, first reached at 0s.  (Were
+    acquires first, it would be 2 at 100s + 1µs.)"""
+    sf = write_events4(
+        spark,
+        tmp_path,
+        [
+            (1, 0, 1, "view"),
+            (2, 100, 1, "view"),
+            (3, 100.000001, 2, "view"),
+            (4, 200, 2, "view"),
+            (5, 200.000001, 3, "view"),
+        ],
+    )
+    got, want = _peak_with_oracle(spark, sf)
+    assert got == want == (3, 1, _base_us())
+
+
+def test_peak_concurrency_tie_across_range_segments(spark, tmp_path):
+    """211 sessions, 422 boundaries, 4 range segments.  Five background
+    sessions open at 0s and stay open to 1200s; 200 one-event sessions
+    follow one per second from 10s, each alone beside the background
+    (6 open).  Two bursts of three simultaneous sessions reach
+    5 + 3 = 8, at 70.5s (around boundary 127, the second segment) and
+    at 180.5s (around boundary 351, the fourth).  The earliest boundary
+    sits in the first segment, so the answer needs the offset carried
+    across segments, and the tie must go to the earlier burst."""
+    rows, eid, uid = [], 0, 0
+
+    def session(*offsets):
+        nonlocal eid, uid
+        uid += 1
+        for off in offsets:
+            eid += 1
+            rows.append((eid, off, uid, "view"))
+
+    for _ in range(5):
+        session(0, 1200)
+    for i in range(200):
+        session(10 + i)
+    for burst in (70.5, 180.5):
+        for _ in range(3):
+            session(burst)
+    sf = write_events4(spark, tmp_path, rows)
+
+    session4 = spark.newSession()
+    session4.conf.set("spark.sql.shuffle.partitions", "4")
+    got, want = _peak_with_oracle(session4, sf)
+    assert got == want == (211, 8, _base_us() + 70_500_000)
+
+
+def test_peak_concurrency_construction_jobs(spark):
+    """Building the query in a fresh session launches no Spark job once
+    the events schema is read (that one job is the catalog's, paid once
+    per session by whichever events query comes first), and executing
+    it launches at most 6.  The sweep is one lineage: no checkpoint
+    runs shuffle stages while the DataFrame is being built."""
+    from spark_nifi_kafka_connected_device_stream_spark.operators.events_engagement import (
+        events_peak_concurrency,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.sources.catalog import load_table
+
+    session = spark.newSession()
+    load_table(session, SF, "events")
+    df, jobs = launched_jobs(spark, lambda: events_peak_concurrency(session, SF))
+    assert jobs == 0
+    _, exec_jobs = launched_jobs(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert exec_jobs <= 6
 
 
 def test_debounce_burst_semantics(spark, tmp_path):
