@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.json_events import json_file_stream
-from .pipeline import parse_product_views, windowed_source_counts
+from .pipeline import _parse_json_once, parse_product_views, windowed_source_counts
 from .sinks import foreach_batch_topk, parquet_sink
 
 
@@ -127,10 +127,11 @@ def parse_doc_wire(raw: DataFrame) -> DataFrame:
     """The document-wire deserialization shared by every doc-stream job
     (ingest, PII gate): from_json against DOC_WIRE_SCHEMA + the
     validity filter.  ONE definition so the jobs cannot silently
-    diverge on what counts as a valid document."""
+    diverge on what counts as a valid document.  Parsed once per row
+    through the same `Generate` fence as `parse_product_views`."""
     return (
-        raw.select(F.from_json("value", DOC_WIRE_SCHEMA).alias("d"))
-        .select("d.*")
+        _parse_json_once(raw, DOC_WIRE_SCHEMA)
+        .select("value.*")
         .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
     )
 

@@ -63,6 +63,61 @@ def test_product_view_job_dual_sink(spark, tmp_path):
     }
 
 
+
+def test_stop_while_collector_blocked_is_a_clean_stop(spark, tmp_path):
+    """stop() while the ranking collector waits on a Spark job
+    interrupts that job.  Spark must see an interruption, not a failure:
+    the query ends 'Stopped' with no exception.  Matching the full
+    interrupted-collect error text overflowed the stream thread's stack,
+    so the status stayed at 'Processing new data'."""
+    import threading
+    import time
+
+    in_dir = str(tmp_path / "in")
+    _write_file(in_dir, "b1.json", [e[2] for e in _mk_events(0, 30)])
+    entered = threading.Event()
+
+    def collector(df, epoch_id):
+        entered.set()
+        # one task, sleeping long enough to be interrupted mid-collect
+        df.sparkSession.range(1, numPartitions=1).selectExpr(
+            "java_method('java.lang.Thread', 'sleep', 3000L)"
+        ).collect()
+
+    ranking_q, parquet_q = run_product_view_job(
+        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "chk"), collector=collector
+    )
+    try:
+        assert entered.wait(60), "the collector never ran"
+        time.sleep(0.5)
+    finally:
+        ranking_q.stop()
+        parquet_q.stop()
+    assert ranking_q.exception() is None
+    assert ranking_q.status["message"] == "Stopped"
+
+
+def test_sink_error_in_collector_fails_the_query(spark, tmp_path):
+    """A real JVM error in the ranking collector stays loud: the query
+    fails and carries the Java exception."""
+    from pyspark.errors import StreamingQueryException
+
+    in_dir = str(tmp_path / "in")
+    _write_file(in_dir, "b1.json", [e[2] for e in _mk_events(0, 30)])
+
+    def collector(df, epoch_id):
+        df.sparkSession._jvm.java.lang.Integer.parseInt("not-a-number")
+
+    ranking_q, parquet_q = run_product_view_job(
+        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "chk"), collector=collector
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match="NumberFormatException"):
+            ranking_q.processAllAvailable()
+    finally:
+        ranking_q.stop()
+        parquet_q.stop()
+
 def test_full_control_plane_lifecycle_offline(spark, tmp_path):
     """The reference DAG's whole chain (dag_file.py:100-102:
     sensor >> download >> spark job >> DDL) as ONE offline run:

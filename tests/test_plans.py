@@ -525,3 +525,64 @@ def test_plan_audit_golden_no_drift(spark):
         "plan drift vs plans/golden.json (shuffles up / broadcasts down / "
         f"pushdown down): {regressions}"
     )
+
+
+def _from_json_evaluations(df) -> int:
+    """`from_json` (JsonToStructs) expressions in the operators of the
+    executed plan.  Scan nodes are skipped: a file scan lists the
+    filters above it as `DataFilters` but does not evaluate them."""
+
+    def nodes(plan):
+        name = plan.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from nodes(plan.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            yield from nodes(plan.plan())
+            return
+        if "Scan" not in name:
+            yield plan
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    def parses(expr) -> int:
+        kids = expr.children()
+        return (expr.getClass().getSimpleName() == "JsonToStructs") + sum(
+            parses(kids.apply(i)) for i in range(kids.size())
+        )
+
+    total = 0
+    for node in nodes(df._jdf.queryExecution().executedPlan()):
+        exprs = node.expressions()
+        total += sum(parses(exprs.apply(i)) for i in range(exprs.size()))
+    return total
+
+
+def test_stream_parse_chains_parse_each_row_once(spark, tmp_path):
+    """Each JSON wire parse chain evaluates `from_json` once per row.
+    With a plain projection the optimizer copies the parse into every
+    drop-malformed filter pushed below it (three parses per row)."""
+    from spark_nifi_kafka_connected_device_stream_spark.sources.json_events import (
+        json_file_batch,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.jobs import parse_doc_wire
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.pipeline import (
+        observe_parse_quality,
+        parse_product_views,
+        windowed_source_counts,
+    )
+
+    (tmp_path / "a.json").write_text(
+        '{"messageid":"m1","userid":"u1","properties":{"productid":"p1"},'
+        '"context":{"source":"desktop"},"timestamp":"2020-01-01 00:00:00.000+0000"}\n'
+        '{"doc_id":1,"text":"hello","source":"web","ts":"2020-01-01 00:00:00"}\n'
+    )
+    raw = json_file_batch(spark, str(tmp_path))
+    chains = {
+        "windowed_source_counts": windowed_source_counts(parse_product_views(raw)),
+        "observe_parse_quality": observe_parse_quality(raw),
+        "parse_doc_wire": parse_doc_wire(raw),
+    }
+    got = {name: _from_json_evaluations(df) for name, df in chains.items()}
+    assert got == dict.fromkeys(chains, 1), got
