@@ -20,7 +20,8 @@ width, warehouse dir + Hive support) with a scale-aware posture:
   by starting a `readlink` process each time; offset, commit, source
   and sink logs and every state-store delta file paid several of those
   per trigger.  Measured on 4 cores, one `perfbench` stream run
-  (backlog drains plus a two-query trickle of `run_product_view_job`)
+  (backlog drains plus a trickle of `run_product_view_job`, when that
+  job still ran two queries)
   started 5,501 `readlink` processes, each forked from the driver
   JVM, and 5 with this manager, none on checkpoint paths; summed
   state-store commit fell from ~370 to ~70 ms per trickle trigger

@@ -4,22 +4,28 @@ its Airflow control plane restated as single driver programs
 → DDL → export → email` collapses into one SparkSession lifecycle).
 
 `run_product_view_job` is v2 (`nifi_spark_kafka_product_view_platform_v2.py`)
-complete: ONE aggregation lineage fanned out to TWO concurrent sinks
-(foreachBatch ranking emit + parquet append), each with its own
-checkpoint — the §2.7 "two concurrent queries on one lineage" pattern.
+complete: ONE aggregation lineage feeding TWO sinks (per-epoch ranking
+emit + append of finalized windows to parquet) from ONE streaming
+query.  The reference ran them as two concurrent queries (§2.7); here
+one foreachBatch epoch function serves both, so each trigger scans,
+parses, shuffles and keeps state once.  It returns that query twice,
+`(q, q)`, and there is no `parquet/` checkpoint; the parquet files are
+`part-e<N>-<i>.parquet`, named by the epoch N that closed their
+windows.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.json_events import json_file_stream
 from .pipeline import _parse_json_once, parse_product_views, windowed_source_counts
-from .sinks import foreach_batch_topk, parquet_sink
+from .sinks import parquet_sink, product_view_epoch
 
 
 def run_product_view_job(
@@ -37,43 +43,59 @@ def run_product_view_job(
     """The full v2 pipeline on the file source (Kafka-swappable: pass
     any raw DataFrame with a `value` column through the same chain).
 
-    Returns the two StreamingQuery handles (ranking, parquet).  With
+    ONE update-mode query, checkpointed at `{checkpoint_dir}/ranking`,
+    feeds both sinks through `sinks.product_view_epoch`:
+
+    - the ranking (v2:77-81): each epoch ranks the groups UPDATED in
+      that trigger, as the reference sorted each console micro-batch —
+      a delta ranking, not a global standing;
+    - the warehouse parquet (v2:84-89), pruned to the commerce schema
+      (source, source_number) as at v2:74: each window once the
+      watermark closes it, in `output_dir/part-e<N>-<i>.parquet`
+      written by the epoch N that closed it.
+
+    `output_dir` must not hold a file-sink log (`_spark_metadata`):
+    Spark's parquet reader would list only the files in that log and
+    hide every file this job writes.
+
+    Returns the query twice, `(q, q)`, for callers that unpack a
+    (ranking, parquet) pair; both handles are the same query.  With
     `block=True` behaves like the reference's awaitTermination
     (v2:91)."""
+    jvm = spark._jvm
+    log = jvm.org.apache.hadoop.fs.Path(f"{output_dir}/_spark_metadata")
+    if log.getFileSystem(spark._jsc.hadoopConfiguration()).exists(log):
+        raise ValueError(
+            f"{output_dir} holds a parquet file-sink log (_spark_metadata); "
+            "Spark's reader would hide the files this job writes there"
+        )
     raw = json_file_stream(spark, input_dir)
     agg = windowed_source_counts(
         parse_product_views(raw),
         window_duration=window_duration,
         watermark=watermark,
     )
-    # sink A (v2:77-81): per-epoch ranking emit.  Update-mode
-    # semantics, faithfully the reference's: each epoch ranks the
-    # groups UPDATED in that trigger (the reference sorted each
-    # console micro-batch the same way) — it is a delta ranking, not
-    # a global standing; consumers needing the global top-k over all
-    # open windows read sink B and rank there
-    ranking_q = (
-        foreach_batch_topk(agg, k=topk, collector=collector)
-        .outputMode("update")
-        .option("checkpointLocation", f"{checkpoint_dir}/ranking")
-        .start()
+    # Spark's own parse of the duration string, without a Spark job
+    window_ms = (
+        jvm.org.apache.spark.sql.catalyst.util.IntervalUtils.fromIntervalString(window_duration)
+        .extractAsDuration()
+        .toMillis()
     )
-    # sink B (v2:84-89): warehouse parquet, columns pruned to the
-    # commerce schema (source, source_number) as at v2:74.  If ITS
-    # start fails (bad trigger string, unwritable path), the already-
-    # running sink A must not leak as an orphaned query advancing its
-    # checkpoint forever (round-16 review)
-    pruned = agg.select("source", "source_number")
-    w = parquet_sink(pruned, output_dir, f"{checkpoint_dir}/parquet", trigger=trigger)
-    try:
-        parquet_q = w.start()
-    except Exception:
-        ranking_q.stop()
-        raise
+    checkpoint = f"{checkpoint_dir}/ranking"
+    w = (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(partial(
+            product_view_epoch, checkpoint=checkpoint, output_dir=output_dir,
+            window_ms=window_ms, k=topk, collector=collector,
+        ))
+        .option("checkpointLocation", checkpoint)
+    )
+    if trigger:
+        w = w.trigger(processingTime=trigger)
+    q = w.start()
     if block:
-        for q in (ranking_q, parquet_q):
-            q.awaitTermination()
-    return ranking_q, parquet_q
+        q.awaitTermination()
+    return q, q
 
 
 def http_ingest(url: str, dest_path: str, expected_substring: str | None = "event") -> str:

@@ -5,7 +5,9 @@ Each helper returns a configured `DataStreamWriter` (caller invokes
 
 - console (K1, v1:60-65)               → console_sink
 - foreachBatch sorted emit (K2, v2:9-14,77-81) → foreach_batch_topk
+  (one epoch: topk_epoch)
 - parquet append (K3, v2:84-89)        → parquet_sink
+- K2 + K3 of the v2 job on ONE query   → product_view_epoch
 - Kafka publish (K4, NiFi XML:996-1073) → kafka_sink
 - warehouse DDL (K5, dag:68-81)        → warehouse.create_external_table
 - JDBC export (K6, dag:83-90)          → warehouse.jdbc_export
@@ -27,7 +29,10 @@ an epoch:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from contextlib import contextmanager
+from functools import partial
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -74,12 +79,13 @@ def parquet_sink(
     `.partitionBy("dt")` on a date column derived from the window start
     so downstream scans partition-prune.
 
-    Every trigger commits one part file, and the file is empty (schema
-    only) when no window finalizes in it: Spark's file writer always
-    writes partition 0.  The benchmark's traced trickle (one small
-    input file every 0.1 s) ran 42 parquet triggers and left 44 files
-    holding 3 rows.  Compacting or partitioning that output is left to
-    the consumers of the directory."""
+    Every trigger commits at least one part file, and the file is empty
+    (schema only) when no window finalizes in it: Spark's file writer
+    always writes partition 0.  A stream fed one small file every
+    0.1 s therefore leaves about one file per trigger, nearly all of
+    them empty.  The product-view job does not use this sink: its
+    epoch function (`product_view_epoch`) writes files only in the
+    epochs that close a window."""
     w = (
         df.writeStream.format("parquet")
         .option("path", path)
@@ -132,6 +138,46 @@ _INTERRUPTIONS = (
 )
 
 
+def topk_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    k: int | None = None,
+    order_col: str = "source_number",
+    collector: Callable[[DataFrame, int], None] | None = None,
+) -> None:
+    """One epoch of K2: `batch_df` sorted by `order_col` descending,
+    cut to `k` rows when k is given, handed to `collector` (default:
+    the console)."""
+    ranked = batch_df.sort(F.desc(order_col))
+    if k is not None:
+        ranked = ranked.limit(k)
+    with _stop_is_interruption():
+        if collector is not None:
+            collector(ranked, epoch_id)
+        else:
+            ranked.write.format("console").save()
+
+
+@contextmanager
+def _stop_is_interruption():
+    """Re-raise a JVM interruption from the body (stop() interrupted
+    the epoch) as a one-line `InterruptedError`.
+
+    Spark tells a stop from a failure by matching the Python error
+    text, Java stack trace included, against
+    StreamExecution.PROXY_ERROR, a regex that recurses once per
+    character: a full trace (8 kB for an interrupted collect)
+    overflows the stream thread's stack.  Its first line alone still
+    matches.  Any other error propagates unchanged."""
+    try:
+        yield
+    except Py4JJavaError as exc:
+        name = exc.java_exception.getClass().getName()
+        if name not in _INTERRUPTIONS:
+            raise
+        raise InterruptedError(f"py4j.protocol.Py4JJavaError: {exc.errmsg} {name}") from None
+
+
 def foreach_batch_topk(
     df: DataFrame,
     k: int | None = None,
@@ -140,34 +186,134 @@ def foreach_batch_topk(
 ) -> DataStreamWriter:
     """K2/A5/O1 (v2:9-14,77-81): per-epoch re-aggregation — each
     micro-batch arrives as a *batch* DataFrame, globally sorted by
-    count desc.  The reference's unbounded `sort(desc(...))` is kept
-    but bounded with `limit(k)` when k is given (an unbounded global
-    sort per epoch is the part that would not survive scale; top-k
-    compiles to TakeOrdered).  `collector` overrides the console write
-    (used by tests to capture per-epoch frames)."""
+    count desc (`topk_epoch`).  The reference's unbounded
+    `sort(desc(...))` is kept but bounded with `limit(k)` when k is
+    given (an unbounded global sort per epoch is the part that would
+    not survive scale; top-k compiles to TakeOrdered).  `collector`
+    overrides the console write (used by tests to capture per-epoch
+    frames)."""
+    return df.writeStream.foreachBatch(
+        partial(topk_epoch, k=k, order_col=order_col, collector=collector)
+    )
 
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        ranked = batch_df.sort(F.desc(order_col))
-        if k is not None:
-            ranked = ranked.limit(k)
-        try:
-            if collector is not None:
-                collector(ranked, epoch_id)
-            else:
-                ranked.write.format("console").save()
-        except Py4JJavaError as exc:
-            name = exc.java_exception.getClass().getName()
-            if name not in _INTERRUPTIONS:
-                raise
-            # stop() interrupted the epoch.  Spark tells that from a
-            # failure by matching the Python error text, Java stack
-            # trace included, against StreamExecution.PROXY_ERROR, a
-            # regex that recurses once per character: a full trace
-            # (8 kB for an interrupted collect) overflows the stream
-            # thread's stack.  Its first line alone still matches.
-            raise InterruptedError(f"py4j.protocol.Py4JJavaError: {exc.errmsg} {name}") from None
 
-    return df.writeStream.foreachBatch(fn)
+def product_view_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    checkpoint: str,
+    output_dir: str,
+    window_ms: int,
+    k: int | None = None,
+    collector: Callable[[DataFrame, int], None] | None = None,
+) -> None:
+    """Both sinks of the v2 job (K2 + K3, v2:77-89) on ONE update-mode
+    query over `windowed_source_counts`, whose checkpoint is
+    `checkpoint` and whose tumbling windows are `window_ms` long.
+
+    Every epoch ranks its updated rows (`topk_epoch`).  An epoch whose
+    watermark passes a window end also appends, to `output_dir`, the
+    (source, source_number) rows of the windows Spark evicts from the
+    aggregation's state in it: exactly the rows an append-mode query
+    would write in that batch.  The check reads the watermarks of this
+    epoch and the last from the offsets log; epochs whose watermark
+    passes no window end run no other Spark job.  See
+    `_append_closed_windows` for what is read.
+
+    The output is `output_dir/part-e<N>-<i>.parquet`, one set of files
+    per epoch N whose watermark passed a window end (schema only if
+    no open window ended there).  A replayed epoch reads the same
+    offsets and state version and replaces its own files, so the
+    directory holds every closed window exactly once."""
+    spark = batch_df.sparkSession
+    wm, offsets = _offset_log_entry(spark, checkpoint, epoch_id)
+    prev, prev_offsets = (
+        _offset_log_entry(spark, checkpoint, epoch_id - 1) if epoch_id > 0 else (wm, None)
+    )
+    if wm // window_ms == prev // window_ms:  # no window end in (prev, wm]
+        topk_epoch(batch_df, epoch_id, k=k, collector=collector)
+        return
+    # rows of an epoch with input may belong to windows it closes, so
+    # the append reads batch_df a second time: cache it for that epoch
+    # instead of running the stateful plan twice.  A no-data epoch
+    # (same source offsets as the last) has no rows.
+    rows = None if offsets == prev_offsets else batch_df.persist()
+    try:
+        topk_epoch(batch_df, epoch_id, k=k, collector=collector)
+        with _stop_is_interruption():
+            _append_closed_windows(spark, epoch_id, checkpoint, output_dir, wm, rows)
+    finally:
+        batch_df.unpersist()
+
+
+def _offset_log_entry(
+    spark: SparkSession, checkpoint: str, batch_id: int
+) -> tuple[int, list[str]]:
+    """A batch's entry in the query's offsets log: `batchWatermarkMs`
+    from its JSON metadata line (the second), and its source offset
+    lines (the rest)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{checkpoint}/offsets/{batch_id}")
+    stream = path.getFileSystem(spark._jsc.hadoopConfiguration()).open(path)
+    try:
+        # one py4j call for the bytes: each JVM class lookup costs ~1 ms
+        lines = bytes(stream.readAllBytes()).decode("utf-8").splitlines()
+    finally:
+        stream.close()
+    return json.loads(lines[1])["batchWatermarkMs"], lines[2:]
+
+
+def _append_closed_windows(
+    spark: SparkSession,
+    epoch_id: int,
+    checkpoint: str,
+    output_dir: str,
+    wm: int,
+    batch_df: DataFrame | None,
+) -> None:
+    """Write the windows epoch N evicts (end <= its watermark `wm`) as
+    `output_dir/part-e<N>-<i>.parquet`.
+
+    Their counts come from the State Data Source at batch N-1: that
+    version holds every open window, and none that ended at or before
+    the previous watermark.  Spark drops a row as late only against
+    the PREVIOUS batch's watermark, so epoch N's own rows can still
+    update, or create, a window it closes: those rows of `batch_df`
+    (None for an epoch without input) replace the stored ones.  The
+    files are staged under `output_dir/_staging` and renamed into
+    place after this epoch's older files are deleted."""
+    keys = ["start", "end", "source"]
+    closed = F.col("end") <= F.timestamp_millis(F.lit(wm))
+    rows = (
+        spark.read.format("statestore")
+        .option("batchId", epoch_id - 1)
+        .load(checkpoint)
+        .select("key.window.*", "key.source", F.col("value.count").alias("source_number"))
+        .filter(closed)
+    )
+    if batch_df is not None:
+        late = batch_df.filter(closed)
+        # null-safe: a NULL source is one group in the aggregation too
+        rows = rows.alias("s").join(
+            late.select(*keys).alias("l"),
+            [F.col(f"s.{c}").eqNullSafe(F.col(f"l.{c}")) for c in keys],
+            "left_anti",
+        ).unionByName(late)
+    stage = f"{output_dir}/_staging/epoch={epoch_id}"
+    rows.select("source", "source_number").write.mode("overwrite").parquet(stage)
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs = Path(output_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    for old in fs.globStatus(Path(f"{output_dir}/part-e{epoch_id}-*.parquet")) or ():
+        fs.delete(old.getPath(), False)
+    staged = sorted(
+        (st.getPath() for st in fs.listStatus(Path(stage))
+         if st.getPath().getName().startswith("part-")),
+        key=lambda p: p.getName(),
+    )
+    for i, src in enumerate(staged):
+        dst = Path(f"{output_dir}/part-e{epoch_id}-{i}.parquet")
+        if not fs.rename(src, dst):
+            raise IOError(f"could not move {src} to {dst}")
+    fs.delete(Path(f"{output_dir}/_staging"), True)
 
 
 def _read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:

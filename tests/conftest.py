@@ -55,6 +55,17 @@ def rocksdb_state_store(spark):
             spark.conf.set(key, prev)
 
 
+@pytest.fixture(params=["hdfs", "rocksdb"])
+def state_store(request, spark):
+    """Run the test once under the default (HDFS-backed) state store
+    provider and once under RocksDB."""
+    if request.param == "rocksdb":
+        with rocksdb_state_store(spark):
+            yield request.param
+    else:
+        yield request.param
+
+
 _JOB_GROUPS = itertools.count()
 
 

@@ -1,21 +1,43 @@
-"""End-to-end v2 job: ONE aggregation lineage fanned out to TWO
-concurrent sinks (foreachBatch ranking + warehouse parquet), each with
-its own checkpoint — SURVEY.md §2.7 / §3.2.  Plus the full Airflow
-control plane (C1-C6 + K5) replayed offline through file:// URLs.
+"""End-to-end v2 job: ONE aggregation lineage feeding TWO sinks
+(per-epoch ranking + warehouse parquet of finalized windows) from ONE
+streaming query — SURVEY.md §2.7 / §3.2.  Its output is pinned against
+the reference's two-query form (a `foreach_batch_topk` update query and
+a `parquet_sink` append query over the same input).  Plus the full
+Airflow control plane (C1-C6 + K5) replayed offline through file://
+URLs.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import time
+from collections import Counter
+from functools import partial
 
 import pytest
 
+from spark_nifi_kafka_connected_device_stream_spark.sources.json_events import (
+    json_file_stream,
+)
 from spark_nifi_kafka_connected_device_stream_spark.streaming.jobs import (
     http_ingest,
     run_product_view_job,
 )
+from spark_nifi_kafka_connected_device_stream_spark.streaming.pipeline import (
+    parse_product_views,
+    windowed_source_counts,
+)
+from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
+    foreach_batch_topk,
+    parquet_sink,
+    product_view_epoch,
+)
 
 from .test_streaming import _event, _mk_events, _write_file
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_product_view_job_dual_sink(spark, tmp_path):
@@ -37,6 +59,9 @@ def test_product_view_job_dual_sink(spark, tmp_path):
         spark, in_dir, out_dir, chk_dir, topk=3, collector=collector
     )
     try:
+        # one query serves both sinks, with one checkpoint
+        assert ranking_q is parquet_q
+        assert [q.id for q in spark.streams.active] == [ranking_q.id]
         ranking_q.processAllAvailable()
         parquet_q.processAllAvailable()
         _write_file(in_dir, "b2.json", [e[2] for e in _mk_events(20, 6, start_i=999)])
@@ -52,6 +77,8 @@ def test_product_view_job_dual_sink(spark, tmp_path):
         counts = [r["source_number"] for r in rows]
         assert counts == sorted(counts, reverse=True) and len(rows) <= 3
 
+    assert os.listdir(chk_dir) == ["ranking"]
+
     # sink B: warehouse parquet holds the finalized windows with the
     # commerce schema (source, source_number) — v2:74/dag:72-75
     back = spark.read.parquet(out_dir)
@@ -62,6 +89,148 @@ def test_product_view_job_dual_sink(spark, tmp_path):
         (s, 30) for s in ("desktop", "mobile-web", "mobile-app")
     }
 
+
+def _reference_queries(spark, in_dir, chk_dir, max_files_per_trigger=None):
+    """The job's two sinks as the reference ran them: two queries over
+    the same input, an update-mode ranking and an append-mode parquet
+    file sink.  Returns (ranking query, its epochs, parquet query,
+    parquet dir)."""
+
+    def agg():
+        raw = json_file_stream(spark, in_dir, max_files_per_trigger=max_files_per_trigger)
+        return windowed_source_counts(parse_product_views(raw))
+
+    epochs = {}
+    ranking = (
+        foreach_batch_topk(agg(), collector=partial(_record, epochs))
+        .outputMode("update")
+        .option("checkpointLocation", f"{chk_dir}/ranking")
+        .start()
+    )
+    out = f"{chk_dir}/out"
+    parquet = parquet_sink(
+        agg().select("source", "source_number"), out, f"{chk_dir}/parquet"
+    ).start()
+    return ranking, epochs, parquet, out
+
+
+def _record(epochs, df, epoch_id):
+    rows = df.collect()
+    counts = [r["source_number"] for r in rows]
+    assert counts == sorted(counts, reverse=True)
+    epochs[epoch_id] = sorted(tuple(r) for r in rows)
+
+
+def _parquet_rows(spark, path) -> Counter:
+    return Counter((r["source"], r["source_number"]) for r in spark.read.parquet(path).collect())
+
+
+def test_product_view_job_matches_two_query_reference(spark, tmp_path, state_store):
+    """Input fed over several triggers, each file followed by
+    processAllAvailable() on every query: the job's ranking epochs
+    equal the reference ranking query's, epoch by epoch, and its
+    parquet rows equal the reference append query's."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    feed = [
+        _mk_events(0, 90) + _mk_events(5, 60, start_i=90),
+        _mk_events(11, 30, start_i=150),  # watermark 10:06:29 closes 10:00
+        # 10:02 is behind a closed window: dropped as late by both
+        _mk_events(2, 6, start_i=300) + _mk_events(12, 30, start_i=400),
+        _mk_events(20, 30, start_i=999),  # closes 10:05 and 10:10
+    ]
+    os.makedirs(in_dir)
+    epochs = {}
+    job, _ = run_product_view_job(
+        spark, in_dir, out_dir, str(tmp_path / "chk"), topk=None,
+        collector=partial(_record, epochs),
+    )
+    ref, ref_epochs, ref_parquet, ref_out = _reference_queries(
+        spark, in_dir, str(tmp_path / "ref")
+    )
+    queries = (job, ref, ref_parquet)
+    try:
+        for i, events in enumerate(feed):
+            _write_file(in_dir, f"b{i}.json", [e[2] for e in events])
+            for q in queries:
+                q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    assert len(epochs) >= 2 * len(feed) - 1
+    assert epochs == ref_epochs
+    assert _parquet_rows(spark, out_dir) == _parquet_rows(spark, ref_out)
+    # per source: 10:00 = 30, 10:05 = 20, 10:10 = 10 + 10
+    assert _parquet_rows(spark, out_dir) == Counter(
+        {(s, n): c for s in ("desktop", "mobile-web", "mobile-app") for n, c in ((30, 1), (20, 2))}
+    )
+
+
+def test_product_view_epoch_counts_rows_of_the_closing_epoch(spark, tmp_path, state_store):
+    """Spark drops a row as late against the PREVIOUS batch's
+    watermark, so a batch can add rows to a window, or open one, that
+    its own watermark closes.  Fed one file per trigger with no
+    no-data batch in between, the fused epoch function must append
+    those windows with the batch's rows counted, as the reference
+    append query does."""
+    in_dir, out_dir, chk = (str(tmp_path / d) for d in ("in", "out", "chk"))
+    files = [
+        # batch 0: 10:00 opens; the 10:20 marker moves the watermark to 10:15
+        _mk_events(0, 30) + [(None, None, _event("2021-03-06 10:20:00.000", 50, "desktop"))],
+        # batch 1, watermark 10:15: adds to 10:00 and opens 10:05, both
+        # closed by that watermark in this same batch
+        _mk_events(1, 9, start_i=60) + _mk_events(7, 6, start_i=70),
+        # batch 2: behind the now-closed windows, dropped as late
+        _mk_events(3, 3, start_i=80)
+        + [(None, None, _event("2021-03-06 10:40:00.000", 90, "mobile-app"))],
+    ]
+    now = time.time()
+    for i, events in enumerate(files):
+        _write_file(in_dir, f"b{i}.json", [e[2] for e in events])
+        # the file source takes the oldest file first
+        os.utime(os.path.join(in_dir, f"b{i}.json"), (now - 10 + i, now - 10 + i))
+    epochs = {}
+    raw = json_file_stream(spark, in_dir, max_files_per_trigger=1)
+    fused = (
+        windowed_source_counts(parse_product_views(raw))
+        .writeStream.outputMode("update")
+        .foreachBatch(partial(
+            product_view_epoch, checkpoint=f"{chk}/ranking", output_dir=out_dir,
+            window_ms=5 * 60 * 1000, collector=partial(_record, epochs),
+        ))
+        .option("checkpointLocation", f"{chk}/ranking")
+        .start()
+    )
+    ref, ref_epochs, ref_parquet, ref_out = _reference_queries(
+        spark, in_dir, str(tmp_path / "ref"), max_files_per_trigger=1
+    )
+    queries = (fused, ref, ref_parquet)
+    try:
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    assert epochs == ref_epochs
+    got = _parquet_rows(spark, out_dir)
+    assert got == _parquet_rows(spark, ref_out)
+    # 10:00: 10 + 3 per source; 10:05: 2 per source; 10:20: 1
+    assert got == Counter(
+        {(s, n): 1 for s in ("desktop", "mobile-web", "mobile-app") for n in (13, 2)}
+        | {("desktop", 1): 1}
+    )
+
+
+def test_product_view_job_rejects_a_file_sink_output_dir(spark, tmp_path):
+    """A `_spark_metadata` log in the output dir (left by a parquet
+    file sink) makes Spark's reader list only the files in that log,
+    hiding every file this job writes: refuse it before starting."""
+    out_dir = tmp_path / "out"
+    (out_dir / "_spark_metadata").mkdir(parents=True)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        run_product_view_job(spark, str(tmp_path / "in"), str(out_dir), str(tmp_path / "chk"))
+    assert len(spark.streams.active) == active
+    assert not (tmp_path / "chk").exists()
 
 
 def test_stop_while_collector_blocked_is_a_clean_stop(spark, tmp_path):
@@ -95,6 +264,50 @@ def test_stop_while_collector_blocked_is_a_clean_stop(spark, tmp_path):
         parquet_q.stop()
     assert ranking_q.exception() is None
     assert ranking_q.status["message"] == "Stopped"
+
+
+STOP_SCRIPT = r"""
+import os, sys, threading, time
+repo, work = sys.argv[1:3]
+sys.path.insert(0, repo)
+from spark_nifi_kafka_connected_device_stream_spark.session import get_session
+from spark_nifi_kafka_connected_device_stream_spark.streaming.jobs import run_product_view_job
+from tests.test_streaming import _mk_events, _write_file
+
+spark = get_session(app_name="stop-stderr", master="local[2]", shuffle_partitions=2)
+in_dir = os.path.join(work, "in")
+_write_file(in_dir, "b1.json", [e[2] for e in _mk_events(0, 30) + _mk_events(11, 30, start_i=30)])
+entered = threading.Event()
+
+def collector(df, epoch_id):
+    df.collect()
+    entered.set()
+    df.sparkSession.range(1, numPartitions=1).selectExpr(
+        "java_method('java.lang.Thread', 'sleep', 3000L)").collect()
+
+q, _ = run_product_view_job(spark, in_dir, os.path.join(work, "out"),
+                            os.path.join(work, "chk"), collector=collector)
+assert entered.wait(120), "the collector never ran"
+time.sleep(0.5)
+q.stop()
+print("STOPPED", q.status["message"], q.exception())
+spark.stop()
+"""
+
+
+def test_stop_while_collector_blocked_logs_no_error(tmp_path):
+    """The clean stop above, in a fresh process whose stderr is read:
+    stopping the job must log no ERROR line.  pytest cannot capture the
+    JVM's stderr, hence the subprocess."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", STOP_SCRIPT, REPO, str(tmp_path)],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "STOPPED Stopped None" in out.stdout
+    errors = [ln for ln in out.stderr.splitlines() if " ERROR " in ln]
+    assert errors == [], "\n".join(errors[:10])
 
 
 def test_sink_error_in_collector_fails_the_query(spark, tmp_path):
